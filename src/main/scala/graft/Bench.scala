@@ -79,6 +79,22 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
   * sized for a 243-query session, table warmup through Tables.byName.
   */
 object Bench {
+  /** Consume a query through a CONTENT-DEPENDENT checksum, not
+    * .count(): under count() Catalyst prunes unused columns, which can
+    * delete whole subtrees — observed round 4: the composed as-of forms'
+    * unused window columns collapsed the Window, whose removal let the
+    * kind=1 filter prune the entire build branch of the union, so
+    * "join_asof_daily: 0.12 s" was really a bare events scan-count.
+    * bit_xor(xxhash64(struct(*))) forces every output column of every
+    * row to be computed (any cell change flips the checksum) while
+    * adding only a cheap partial-aggregated fold — the same work a real
+    * consumer writing the result out would induce. */
+  def consume(df: DataFrame): Unit = {
+    df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))))
+      .collect()
+    ()
+  }
+
   /** Seconds the invoking sbt chain spent BEFORE this JVM forked (boot,
     * project load, compile check) — measured, not modeled, by walking
     * /proc ancestors and taking the age of the oldest ancestor younger
@@ -222,21 +238,6 @@ object Bench {
     localDir.foreach(d => builder.config("spark.local.dir", d))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Consume every query through a CONTENT-DEPENDENT checksum, not
-    // .count(): under count() Catalyst prunes unused columns, which can
-    // delete whole subtrees — observed round 4: the composed as-of forms'
-    // unused window columns collapsed the Window, whose removal let the
-    // kind=1 filter prune the entire build branch of the union, so
-    // "join_asof_daily: 0.12 s" was really a bare events scan-count.
-    // bit_xor(xxhash64(struct(*))) forces every output column of every
-    // row to be computed (any cell change flips the checksum) while
-    // adding only a cheap partial-aggregated fold — the same work a real
-    // consumer writing the result out would induce.
-    def consume(df: DataFrame): Unit = {
-      df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))))
-        .collect()
-      ()
-    }
     // parse + validate overrides BEFORE any Spark work — discovering a
     // bad value after a multi-minute run would waste it
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
@@ -515,7 +516,7 @@ object Bench {
         // — harmless at sf0.001, but a stuck 4-partition width would
         // distort every timed sweep. The timed sweeps are sequential,
         // so scopes nest correctly from here on.
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.unset("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.shuffle.partitions", cpus)
         // same interleaving hazard for the recursion guard (r8 advice):
         // sqlRecursiveCte save/restores spark.sql.cteRecursionRowLimit,

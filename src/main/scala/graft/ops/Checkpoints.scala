@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage-cut policy for the iterative/convergence loops (connected
   * components, SCC, PageRank, k-core, label propagation, …).
@@ -59,5 +60,20 @@ object Checkpoints {
           df.checkpoint(eager)
         case None => df.localCheckpoint(eager)
       }
+
+    /** Frees the blocks pinned by the cut frames `df` reads directly (a
+      * cut frame, or a projection/join over cut frames). These belong
+      * to the RDD under each frame's LogicalRDD, which
+      * `Dataset.unpersist` never reaches. A local checkpoint has no
+      * lineage to recompute from, so release a frame only once nothing
+      * will read it again: a loop releases round N after round N+1 has
+      * materialized, and a frame the returned query still reads goes to
+      * [[PipelineCache.register]], whose `releaseAll` calls this. Spark
+      * logs a WARN for each released local checkpoint saying exactly
+      * that; here it is expected. */
+    def releaseCut(): Unit = df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
   }
 }

@@ -89,27 +89,34 @@ object GraphQueries {
     * 32+32-task round stage (per-task dispatch ≈ 2-3 ms dominates KB
     * of data) into a 4-task one; at 100 TB a billion-row state still
     * gets hundreds of partitions, and anything above the session
-    * width keeps the session width. stateRows < 0 skips the resize. */
+    * width keeps the session width. stateRows < 0 skips the resize.
+    *
+    * Each loop has this one DataFrame implementation at every scale and
+    * core count: an RDD-kernel lane for small states gave the same
+    * answers on all 11 loop queries but took 76.2 s against 28.2 s in
+    * total (sf0.01, local[4], warm), winning only two queries, by under
+    * 0.7 s each. */
   private[graft] def withLoopExec[T](s: SparkSession, stateRows: Long)(body: => T): T = {
     val aqeKey = "spark.sql.adaptive.enabled"
     val shKey = "spark.sql.shuffle.partitions"
     // Save-at-entry / restore-at-exit: callers legitimately change these
     // confs (DeterminismSpec's 2-vs-9 partition experiment; a memoized
-    // "session original" would clobber them on scope exit). The one
-    // concurrent context — Bench's parallel compile pass — can
-    // interleave saves and leave a scope's temporary stuck; Bench
-    // re-pins both confs after that pass, bounding the race to the
-    // sf0.001 warmup where neither flag affects anything measured.
-    val aqeOrig = s.conf.get(aqeKey, "true")
-    val shOrig = s.conf.get(shKey, "200")
+    // "session original" would clobber them on scope exit). A key that
+    // was unset at entry is unset again at exit, so the session keeps
+    // following the default. The one concurrent context — Bench's
+    // parallel compile pass — can interleave saves and leave a scope's
+    // temporary stuck; Bench re-pins both confs after that pass,
+    // bounding the race to the sf0.001 warmup where neither flag
+    // affects anything measured.
+    val entry = s.conf.getAll
+    val width = s.conf.get(shKey).toLong
     s.conf.set(aqeKey, "false")
     if (stateRows >= 0) {
       val sized = math.max(4L, stateRows / (2L * 1000 * 1000))
-      s.conf.set(shKey, math.min(shOrig.toLong, sized).toString)
+      s.conf.set(shKey, math.min(width, sized).toString)
     }
-    try body finally {
-      s.conf.set(aqeKey, aqeOrig)
-      s.conf.set(shKey, shOrig)
+    try body finally Seq(aqeKey, shKey).foreach { k =>
+      entry.get(k).fold(s.conf.unset(k))(s.conf.set(k, _))
     }
   }
 
@@ -327,14 +334,18 @@ object GraphQueries {
       val dir = supportDir(s, d)
       dir.join(dir.groupBy("src").agg(count(lit(1)).as("deg")), "src")
     }
-    pagerankConvergedOnAdjacency(adj, supportVerts(s, d), PrRelTol, PrMaxRounds)
-      .select(col("x").as("l_partkey"), col("pr"), col("n_rounds"))
+    val ranks = pagerankConvergedOnAdjacency(adj, supportVerts(s, d), PrRelTol, PrMaxRounds)
+    PipelineCache.register(s"graph_pagerank_ranks:$d", ranks)
+    ranks.select(col("x").as("l_partkey"), col("pr"), col("n_rounds"))
       .orderBy("l_partkey")
   }
 
   /** Core convergence loop over an explicit adjacency — factored out so
     * the spec can drive it with synthetic graphs (uniform graph → early
-    * exit round 1; tiny cap → cap-trip warning).
+    * exit round 1; tiny cap → cap-trip warning). Each round's ranks are
+    * released once the next round has materialized; the returned frame
+    * reads the last round's, which the caller registers with
+    * [[PipelineCache]] (or leaves to the garbage collector).
     *
     * @param adj   symmetric adjacency with out-degree: (src, dst, deg)
     * @param verts distinct vertex frame: (x)
@@ -348,25 +359,6 @@ object GraphQueries {
     val adjC = adj.cutLineage()
     val nAdj = adjC.count()
     val n = verts.count()
-    val sess = adjC.sparkSession
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // same warm start, same per-round algebra, per-round deltas and
-    // therefore the SAME n_rounds, probed one job per segment instead
-    // of two jobs (probe + broadcast rebuild) per round.
-    if (LoopKernels.enabled(sess, math.max(n, nAdj))) {
-      import org.apache.spark.sql.types.{DoubleType, LongType}
-      val adjRdd = adjC.rdd.map(r => (r.getAs[Long]("src"),
-        (r.getAs[Long]("dst"), r.getAs[Long]("deg"))))
-      val (ranks, rounds, delta) = LoopKernels.pagerankLoop(sess, adjRdd,
-        LoopKernels.longs(verts), n, relTol, maxRounds, math.max(n, nAdj))
-      if (delta >= relTol / n)
-        System.err.println(s"[graft] pagerank: round cap $maxRounds reached " +
-          s"before convergence (max delta $delta >= tol ${relTol / n})")
-      return LoopKernels.toDf(sess,
-          ranks.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-          "x" -> LongType, "pr" -> DoubleType)
-        .select(col("x"), round(col("pr"), 9).as("pr"), lit(rounds).as("n_rounds"))
-    }
     val adjS = if (nAdj <= IterBroadcastMaxRows) broadcast(adjC) else adjC
     withLoopExec(s = adjC.sparkSession, stateRows = math.max(n, nAdj)) {
     val tol = relTol / n
@@ -402,8 +394,10 @@ object GraphQueries {
         // driver barrier per round instead of two (see sccLabels note)
         .cutLineage(eager = false)
       delta = next.agg(max(abs(col("pr") - col("prev")))).head.getDouble(0)
+      ranks.releaseCut()
       ranks = next.select("x", "pr")
     }
+    adjC.releaseCut()
     if (delta >= tol)
       // scale-debug visibility, the ccConverged discipline: a silent cap
       // would report a non-converged ranking as final
@@ -548,27 +542,6 @@ object GraphQueries {
     // checkpointed blocks is one cheap job, paid once per query
     val nDir = dirS.count()
     val verts = supportVerts(s, d)
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) — the
-    // same min-depth fold (bit-exact integers), segments of rounds per
-    // boundary probe; rounds past exhaustion are no-ops on the depth map.
-    if (LoopKernels.enabled(s, nDir)) {
-      import org.apache.spark.sql.types.{IntegerType, LongType}
-      val seeds = LoopKernels.longs(verts).filter(_ % 20 == 0).map((_, 0))
-      val (depth, live) = LoopKernels.minDepthLoop(s, seeds,
-        LoopKernels.longPairs(dirS), BfsMaxDepth, nDir)
-      if (live) {
-        val newly = depth.filter(_._2 == BfsMaxDepth).count()
-        System.err.println(s"[graft] bfs: depth cap $BfsMaxDepth reached " +
-          s"with a non-empty frontier ($newly vertices) — deeper layers report -1")
-      }
-      val depthDf = LoopKernels.toDf(s,
-        depth.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-        "x" -> LongType, "depth" -> IntegerType)
-      return verts.join(depthDf, Seq("x"), "left_outer")
-        .select(coalesce(col("depth"), lit(-1)).as("depth"))
-        .groupBy("depth").agg(count(lit(1)).as("n_vertices"))
-        .orderBy("depth")
-    }
     val dir = if (nDir <= IterBroadcastMaxRows) broadcast(dirS) else dirS
     withLoopExec(s, stateRows = nDir) {
     var depth = verts.filter(col("x") % 20 === 0)
@@ -583,13 +556,17 @@ object GraphQueries {
         .select(col("dst").as("x"), lit(r).as("depth"))
       // lazy: the frontier-count probe below materializes this round's
       // blocks — one driver barrier per round instead of two
-      depth = depth.union(nbrs).groupBy("x").agg(min("depth").as("depth"))
+      val next = depth.union(nbrs).groupBy("x").agg(min("depth").as("depth"))
         .cutLineage(eager = false)
-      newly = depth.filter(col("depth") === r).count()
+      newly = next.filter(col("depth") === r).count()
+      depth.releaseCut()
+      depth = next
     }
     if (newly > 0)
       System.err.println(s"[graft] bfs: depth cap $BfsMaxDepth reached with " +
         s"a non-empty frontier ($newly vertices) — deeper layers report -1")
+    dirS.releaseCut()
+    PipelineCache.register(s"graph_bfs_depth:$d", depth)
     verts.join(depth, Seq("x"), "left_outer")
       .select(coalesce(col("depth"), lit(-1)).as("depth"))
       .groupBy("depth").agg(count(lit(1)).as("n_vertices"))
@@ -624,27 +601,6 @@ object GraphQueries {
     val dir = supportDir(s, d).cutLineage()
     var active = supportVerts(s, d).cutLineage(eager = false)
     var nActive = active.count()
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // same peel algebra (integer degree counts, survivor-count fixpoint
-    // test), per-round counts tagged through one probe job per segment,
-    // so n_rounds is identical to the serial loop's.
-    if (LoopKernels.enabled(s, nActive)) {
-      import org.apache.spark.sql.types.LongType
-      val (core, rounds, converged, nLeft) = LoopKernels.kcoreLoop(s,
-        LoopKernels.longPairs(dir), LoopKernels.longs(active),
-        KCoreK, KCoreMaxRounds, nActive, nActive)
-      if (!converged)
-        System.err.println(s"[graft] kcore: round cap $KCoreMaxRounds reached " +
-          s"before fixpoint ($nLeft vertices still active)")
-      val coreDf = LoopKernels.toDf(s,
-        core.map(x => org.apache.spark.sql.Row(x)), "x" -> LongType)
-      return dir
-        .join(coreDf.select(col("x").as("src")), "src")
-        .join(coreDf.select(col("x").as("dst")), "dst")
-        .groupBy(col("src").as("l_partkey")).agg(count(lit(1)).as("core_deg"))
-        .select(col("l_partkey"), col("core_deg"), lit(rounds).as("n_rounds"))
-        .orderBy("l_partkey")
-    }
     withLoopExec(s, stateRows = nActive) {
     var rounds = 0
     var converged = false
@@ -662,11 +618,14 @@ object GraphQueries {
       val n = keep.count()
       converged = n == nActive
       nActive = n
+      active.releaseCut()
       active = keep
     }
     if (!converged)
       System.err.println(s"[graft] kcore: round cap $KCoreMaxRounds reached " +
         s"before fixpoint ($nActive vertices still active)")
+    PipelineCache.register(s"graph_kcore_edges:$d", dir)
+    PipelineCache.register(s"graph_kcore_core:$d", active)
     dir
       .join(active.select(col("x").as("src")), "src")
       .join(active.select(col("x").as("dst")), "dst")
@@ -837,38 +796,28 @@ object GraphQueries {
     * round are O(m), never neighbor lists. The changed-count test adds
     * one exchange of the two O(n) label frames per round — the same
     * cost class as pagerank's max|Δ| scalar. */
-  def graphLpaConverged(s: SparkSession, d: String): DataFrame =
-    lpaConvergedOnAdjacency(supportDir(s, d), supportVerts(s, d), LpaMaxRounds)
-      .select(col("x").as("l_partkey"), col("lbl").as("community"),
+  def graphLpaConverged(s: SparkSession, d: String): DataFrame = {
+    val labels = lpaConvergedOnAdjacency(supportDir(s, d), supportVerts(s, d),
+      LpaMaxRounds)
+    PipelineCache.register(s"graph_lpa_labels:$d", labels)
+    labels.select(col("x").as("l_partkey"), col("lbl").as("community"),
         col("n_rounds"))
       .orderBy("l_partkey")
+  }
 
   /** Core self-vote LPA loop over an explicit symmetric adjacency —
     * factored so the spec can drive it with synthetic graphs (a
-    * bipartite flip-prone 4-cycle; two cliques joined by a bridge). */
+    * bipartite flip-prone 4-cycle; two cliques joined by a bridge).
+    * Each round's labels are released once the next round has
+    * materialized; the returned frame reads the last round's, which the
+    * caller registers with [[PipelineCache]] (or leaves to the garbage
+    * collector). */
   private[graft] def lpaConvergedOnAdjacency(dir: DataFrame,
       verts: DataFrame, maxRounds: Int): DataFrame = {
     // base snapshot — see sccLabels
     val dirS = dir.cutLineage()
     val nDir = dirS.count()
     val sess = dirS.sparkSession
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // same self-vote (−count, label) argmin (integer votes, bit-exact),
-    // per-round changed-label counts tagged through one probe job per
-    // segment, so n_rounds is identical to the serial loop's.
-    if (LoopKernels.enabled(sess, nDir)) {
-      import org.apache.spark.sql.types.LongType
-      val labels0 = LoopKernels.longs(verts).map(x => (x, x))
-      val (labels, rounds, converged, lastChanged) = LoopKernels.lpaLoop(sess,
-        LoopKernels.longPairs(dirS), labels0, maxRounds, nDir)
-      if (!converged)
-        System.err.println(s"[graft] lpa: round cap $maxRounds reached " +
-          s"before fixpoint ($lastChanged labels still changing)")
-      return LoopKernels.toDf(sess,
-          labels.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-          "x" -> LongType, "lbl" -> LongType)
-        .select(col("x"), col("lbl"), lit(rounds).as("n_rounds"))
-    }
     withLoopExec(sess, stateRows = nDir) {
     def step(lbl: DataFrame): DataFrame =
       dirS.join(lbl.select(col("x").as("dst"), col("lbl")), "dst")
@@ -888,11 +837,13 @@ object GraphQueries {
       val next = step(cur).cutLineage(eager = false)
       changed = next.join(cur.select(col("x"), col("lbl").as("prev")), Seq("x"))
         .filter(col("lbl") =!= col("prev")).count()
+      cur.releaseCut()
       cur = next
     }
     if (changed > 0)
       System.err.println(s"[graft] lpa: round cap $maxRounds reached " +
         s"before fixpoint ($changed labels still changing)")
+    dirS.releaseCut()
     cur.select(col("x"), col("lbl"), lit(rounds).as("n_rounds"))
     }
   }
@@ -982,33 +933,6 @@ object GraphQueries {
     // inside fwbwDepth — see IterBroadcastMaxRows
     val edges = seqEdges(s, d).cutLineage()
     val nEdges = edges.count()
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // the same tagged FW+BW min-round closure (integer folds,
-    // bit-exact), same max-out-degree/min-id pivot, same both-dirs
-    // intersection; boundary probes replace per-round count jobs.
-    if (LoopKernels.enabled(s, 2 * nEdges)) {
-      import org.apache.spark.sql.types.LongType
-      val eRdd = LoopKernels.longPairs(edges)
-      val pivots = eRdd.mapValues(_ => 1L)
-        .reduceByKey((a: Long, b: Long) => a + b)
-        .map { case (src, odeg) => (odeg, src) }
-        .top(1)(LoopKernels.PivotOrdering)
-        .map { case (_, src) => (src, src) }
-        .toSeq
-      val (depth, live) = LoopKernels.fwbwLoop(s, eRdd, pivots,
-        SccMaxRounds, 2 * nEdges)
-      if (live)
-        System.err.println(s"[graft] scc: round cap $SccMaxRounds " +
-          "reached — closure may be incomplete")
-      val members = depth
-        .map { case ((x, pid, dir), _) => ((x, pid), 1 << dir) }
-        .reduceByKey((a: Int, b: Int) => a | b)
-        .filter(_._2 == 3)
-        .keys.map(_._1)
-      return LoopKernels.toDf(s,
-          members.map(x => org.apache.spark.sql.Row(x)), "member" -> LongType)
-        .orderBy("member")
-    }
     withLoopExec(s, stateRows = nEdges) {
     val pivot = edges.groupBy("src").agg(count(lit(1)).as("odeg"))
       .orderBy(col("odeg").desc, col("src")).limit(1)
@@ -1021,6 +945,8 @@ object GraphQueries {
     // Reached set per direction is identical to the two-loop form, so
     // the intersection — and the oracle hash — is unchanged.
     val depth = fwbwDepth(s, edges, pivot, nEdges, "scc")
+    edges.releaseCut()
+    PipelineCache.register(s"graph_scc_pivot_depth:$d", depth)
     // group by (x, pid) like the sccLabels site, even though `pivot`
     // is limit(1) here: the intersection must stay per-pivot if the
     // frame ever carries more than one, or forward reach from one
@@ -1043,7 +969,9 @@ object GraphQueries {
     * join+distinct+anti-join; size-guarded adjacency strategy —
     * per-round broadcast for KB-sized residual graphs, co-partitioned
     * once for large ones. `e` must be checkpointed and counted by the
-    * caller (nE). */
+    * caller (nE). Superseded depth maps and the tagged adjacency are
+    * released inside; the returned (materialized) depth map is the
+    * caller's to release. */
   private def fwbwDepth(s: SparkSession, e: DataFrame, pivots: DataFrame,
       nE: Long, tag: String): DataFrame = {
     // Adjacency strategy, size-guarded on the exact tracked count
@@ -1091,15 +1019,19 @@ object GraphQueries {
       val cand = joined
         .select(col("y").as("x"), col("pid"), col("dir"), lit(r).as("r"))
       // lazy + immediate probe: ONE driver barrier per round
-      depth = depth.unionAll(cand)
+      val next = depth.unionAll(cand)
         .groupBy("x", "pid", "dir").agg(min(col("r")).as("r"))
         .cutLineage(eager = false)
-      if (depth.filter(col("r") === r).count() == 0) grew = false
+      val nNew = next.filter(col("r") === r).count()
+      depth.releaseCut()
+      depth = next
+      if (nNew == 0) grew = false
       else frontier = depth.filter(col("r") === r)
     }
     if (grew)
       System.err.println(s"[graft] $tag: round cap $SccMaxRounds " +
         "reached — closure may be incomplete")
+    adj2.releaseCut()
     depth
   }
 
@@ -1154,25 +1086,6 @@ object GraphQueries {
     val edges = supportEdges(s, d).cutLineage()
     val verts = supportVerts(s, d)
     val nE = edges.count()
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // same Bellman max-relaxation (integer folds, bit-exact) with the
-    // serial loop's own Σ-layer stationarity test probed once per
-    // segment (monotone + idempotent at the fixpoint, so over-run
-    // rounds inside a segment are no-ops).
-    if (LoopKernels.enabled(s, nE)) {
-      import org.apache.spark.sql.types.LongType
-      val (layers, converged) = LoopKernels.topoLoop(s,
-        LoopKernels.longPairs(edges), LoopKernels.longs(verts),
-        TopoMaxRounds, nE)
-      if (!converged)
-        System.err.println(s"[graft] topo_layers: round cap $TopoMaxRounds " +
-          "reached — layering may be incomplete")
-      return LoopKernels.toDf(s,
-          layers.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-          "x" -> LongType, "l" -> LongType)
-        .select(col("x").as("l_partkey"), col("l").as("layer"))
-        .orderBy("l_partkey")
-    }
     withLoopExec(s, stateRows = nE) {
     var layers = verts.withColumn("l", lit(0L)).cutLineage(eager = false)
     var prevSum = -1L
@@ -1184,15 +1097,19 @@ object GraphQueries {
         .select(col("v").as("x"), (col("l") + 1L).as("lv"))
       // lazy: the layer-sum convergence probe below materializes the
       // round — one driver barrier per round instead of two
-      layers = layers.select(col("x"), col("l").as("lv")).unionAll(cand)
+      val next = layers.select(col("x"), col("l").as("lv")).unionAll(cand)
         .groupBy("x").agg(max(col("lv")).as("l"))
         .cutLineage(eager = false)
-      val sumL = layers.agg(sum(col("l"))).collect()(0).getLong(0)
+      val sumL = next.agg(sum(col("l"))).collect()(0).getLong(0)
+      layers.releaseCut()
+      layers = next
       if (sumL == prevSum) converged = true else prevSum = sumL
     }
     if (!converged)
       System.err.println(s"[graft] topo_layers: round cap $TopoMaxRounds " +
         "reached — layering may be incomplete")
+    edges.releaseCut()
+    PipelineCache.register(s"graph_topo_layers:$d", layers)
     layers.select(col("x").as("l_partkey"), col("l").as("layer"))
       .orderBy("l_partkey")
     }
@@ -1309,22 +1226,6 @@ object GraphQueries {
     // plan — the driver-side analogue of checkpointing iteration state.
     val edges = brandSeqEdges(s, d).cutLineage()
     val nE2 = 2 * edges.count()
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) — the
-    // full trim + multi-pivot FW-BW decomposition with the identical
-    // operator sequence (integer folds, bit-exact), trim rounds and
-    // closure rounds unrolled into one probe job per segment, and the
-    // per-round singleton trim labels collapsed to the segment's
-    // residual diff (the union of per-round diffs IS the segment diff).
-    if (LoopKernels.enabled(s, nE2)) {
-      import org.apache.spark.sql.types.LongType
-      val labeledRdd = LoopKernels.sccDecompose(s,
-        LoopKernels.longPairs(edges), SccMaxComponents, SccTrimMaxRounds,
-        SccPivotsPerRound, SccMaxRounds, nE2, m => System.err.println(m))
-      LoopKernels.toDf(s,
-          labeledRdd.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-          "member" -> LongType, "scc_id" -> LongType)
-        .cutLineage()
-    } else {
     withLoopExec(s, stateRows = nE2) {
     val verts = edges.select(col("src").as("x"))
       .unionAll(edges.select(col("dst").as("x"))).distinct()
@@ -1342,6 +1243,9 @@ object GraphQueries {
     var residual = verts.cutLineage(eager = false)
     var nResidual = residual.count()
     val labeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // cut frames the labeled rounds read (residual sets, extractions):
+    // released once the final union below has materialized
+    val held = scala.collection.mutable.ArrayBuffer(residual)
     var trims = 0
     var trimCapWarned = false
     // SIZE-GUARDED broadcast of the residual vertex set: nResidual is
@@ -1376,8 +1280,10 @@ object GraphQueries {
           .select("x")
           .cutLineage(eager = false)
         val nKeep = keep.count()
-        if (nKeep == nResidual) again = false
-        else {
+        if (nKeep == nResidual) {
+          keep.releaseCut()
+          again = false
+        } else {
           // only PRODUCTIVE rounds consume the shared budget — a probe
           // that just confirms the fixpoint is free, otherwise each of
           // the up-to-12 extraction rounds' confirming call would eat a
@@ -1388,6 +1294,7 @@ object GraphQueries {
           labeled += residual.join(keep, Seq("x"), "left_anti")
             .select(col("x").as("member"), col("x").as("scc_id"))
           residual = keep
+          held += keep
           nResidual = nKeep
           again = nResidual > 0
         }
@@ -1448,18 +1355,21 @@ object GraphQueries {
         .join(extracted.select(col("member").as("x")), Seq("x"), "left_anti")
         .cutLineage(eager = false)
       nResidual = residual.count()
+      held ++= Seq(extracted, residual)
+      Seq(e, pivots, depth).foreach(_.releaseCut())
       trimToFixpoint()
     }
     if (nResidual > 0)
       System.err.println(s"[graft] scc_full: extraction-round cap " +
         s"$SccMaxComponents reached with $nResidual vertices unlabeled")
-    labeled.reduceOption(_ unionAll _)
+    val labels = labeled.reduceOption(_ unionAll _)
       .getOrElse(verts.select(col("x").as("member"), col("x").as("scc_id")))
       // snapshot the union-of-rounds plan too: consumers (full listing,
       // condensation, their window/join plans) otherwise re-analyze the
       // whole loop history every time they build on the labeling
       .cutLineage()
-    }
+    (held :+ edges).foreach(_.releaseCut())
+    labels
     }
   }
 

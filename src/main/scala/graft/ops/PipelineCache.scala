@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
+import graft.ops.Checkpoints.LineageCut
+
 /** Lifecycle registry for the persisted base frames shared by the
   * dedup/similarity pipelines.
   *
@@ -100,13 +102,20 @@ object PipelineCache {
   }
 
   /** Adopt an ALREADY-persisted frame into the lifecycle (used by
-    * iterative pipelines that persist per round themselves and need the
-    * surviving final frame released at the query boundary). */
+    * iterative pipelines that cut lineage per round themselves and need
+    * the state the returned query still reads released at the query
+    * boundary). A key registered again replaces the earlier frame,
+    * which is then left to the garbage collector. */
   def register(key: String, df: DataFrame): Unit = frames.put(key, df)
 
-  /** Unpersist every registered frame (non-blocking) and clear. */
+  /** Unpersist every registered frame (non-blocking), including the
+    * lineage-cut blocks it reads ([[Checkpoints.LineageCut.releaseCut]]),
+    * and clear. */
   def releaseAll(): Unit = {
-    frames.values().forEach(df => df.unpersist(blocking = false))
+    frames.values().forEach { df =>
+      df.unpersist(blocking = false)
+      df.releaseCut()
+    }
     frames.clear()
     locks.clear()
   }
