@@ -4,6 +4,7 @@ import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Load phase — the reference's four per-row psycopg2 loops
   * (`/root/reference/etl_process.py:28–191`) re-expressed as
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   *  - `ON CONFLICT DO NOTHING` (plans `:40`, clients `:75`) →
   *    left_anti join against current sink keys, then one batched append.
   *  - `buscar_id` per-row SELECT (`:53–59`) → broadcast equi-join to the
-  *    dimension read back from the sink.
+  *    dimension read back from the sink, once per batch (below).
   *  - per-row SAVEPOINT/ROLLBACK error isolation (`:103,:128`) →
   *    validate-then-split: an inner-join load channel and an anti-join
   *    reject channel carrying the same error strings the reference
@@ -22,6 +23,16 @@ import org.apache.spark.sql.functions._
   * round trips; this path issues one batched INSERT per table. At 100 TB
   * the same plans hold: dims stay broadcast-small, facts never collect
   * to the driver, appends stream per partition through the JDBC sink.
+  *
+  * Each batch is resolved once. The first fact load after the upserts
+  * left-joins the batch to both dimensions' sink ids and persists the
+  * result; both fact loads, both reject channels and every count read
+  * that one frame. So per batch each dimension is read twice: its keys
+  * before its insert-if-absent, its ids once after. An upsert drops the
+  * resolved frame, since it changes a dimension. The counts are
+  * aggregates over the persisted frame, not `Dataset.observe` metrics
+  * around the writes: on Spark 4.1.2 an `Observation` on a frame
+  * written with `write.jdbc` reported 0 rows for a write of 899.
   *
   * Non-atomicity note (SURVEY §7.4): anti-join+append is idempotent per
   * batch but racy under concurrent writers; the reference is
@@ -52,6 +63,7 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
     * descricao (`etl_process.py:28–49`). Runs on the deduped frame, as
     * the reference does (`:219` receives df_clean). */
   def upsertPlanos(clean: DataFrame): Unit = {
+    release() // the dimension changes under any resolved frame
     val novos = clean.select(col("Plano").as("descricao"),
         col("Plano_Valor").as("valor"))
       .groupBy("descricao").agg(min("valor").as("valor")) // deterministic pair pick
@@ -62,6 +74,7 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
 
   /** L4: clients insert-if-absent on cpf_cnpj (`etl_process.py:60–88`). */
   def upsertClientes(clean: DataFrame): Unit = {
+    release()
     val novos = clean.select(
       col("Nome_Razão_Social").as("nome_razao_social"),
       col("Nome_Fantasia").as("nome_fantasia"),
@@ -73,31 +86,72 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
       "tbl_clientes")
   }
 
-  /** Clientes dimension read back with sink-assigned ids, for FK
-    * resolution (replaces per-row `buscar_id`). */
-  private def clienteIds: DataFrame =
-    readTable("tbl_clientes").select(col("id").as("cliente_id"), col("cpf_cnpj"))
+  // FK-resolution outcome of a row of the resolved frame
+  private val clienteFound = col("cliente_id").isNotNull
+  private val contratoOk = clienteFound && col("plano_id").isNotNull
+
+  /** A batch resolved against both dimensions: `batch` left-joined to
+    * the sink-assigned `cliente_id` (by cpf_cnpj) and `plano_id` (by
+    * Plano), persisted. `counts` is one aggregate over it: (loadable
+    * contracts, rejected contracts, rows whose cliente is unknown). It
+    * reads only the two id columns, so a contract-only batch counts too. */
+  private final class Resolved(val batch: DataFrame) {
+    val frame: DataFrame = {
+      val clientes = readTable("tbl_clientes")
+        .select(col("id").as("cliente_id"), col("cpf_cnpj"))
+      val planos = readTable("tbl_planos")
+        .select(col("id").as("plano_id"), col("descricao"))
+      val withCliente = batch.join(broadcast(clientes), Seq("cpf_cnpj"), "left")
+      withCliente
+        .join(broadcast(planos), withCliente("Plano") === planos("descricao"), "left")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    lazy val counts: (Long, Long, Long) = {
+      val r = frame.agg(count(when(contratoOk, 1)), count(when(!contratoOk, 1)),
+        count(when(!clienteFound, 1))).head()
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+  }
+
+  private var memo: Option[Resolved] = None
+
+  /** The resolved form of `clean`, built on first use after the upserts
+    * and shared by both fact loads and their reject channels. Keyed on
+    * the `clean` frame itself: another batch replaces it. */
+  private def resolve(clean: DataFrame): Resolved = memo match {
+    case Some(r) if r.batch eq clean => r
+    case _ =>
+      release()
+      val r = new Resolved(clean)
+      memo = Some(r)
+      r
+  }
+
+  /** (rejected contracts, rejected contacts) of `clean`, from the
+    * aggregate `loadContratos` already ran. */
+  private[etl] def rejectCounts(clean: DataFrame): (Long, Long) = {
+    val (_, contratos, contatos) = resolve(clean).counts
+    (contratos, contatos)
+  }
+
+  /** Unpersists the resolved frame, if any; its reject frames would
+    * then re-read the sink. */
+  private[etl] def release(): Unit = {
+    memo.foreach(_.frame.unpersist())
+    memo = None
+  }
 
   /** L5–L9: contracts with FK resolution, defaults, truncation, and the
     * reject channel (`etl_process.py:91–142`). Returns (loaded, rejects)
     * — rejects carry the reference's error strings in an `erro` column. */
   def loadContratos(clean: DataFrame): (Long, DataFrame) = {
-    val clientes = broadcast(clienteIds)
-    val planos = broadcast(readTable("tbl_planos")
-      .select(col("id").as("plano_id"), col("descricao")))
-
-    val withCliente = clean.join(clientes, Seq("cpf_cnpj"), "left")
-    val withPlano = withCliente
-      .join(planos, withCliente("Plano") === planos("descricao"), "left")
-
-    val rejects = withPlano
-      .filter(col("cliente_id").isNull || col("plano_id").isNull)
+    val resolved = resolve(clean)
+    val rejects = resolved.frame.filter(!contratoOk)
       .select(clean.columns.map(c => col(s"`$c`")) :+
         when(col("cliente_id").isNull, "Cliente não encontrado")
           .otherwise("Plano não encontrado").as("erro"): _*)
 
-    val loadable = withPlano
-      .filter(col("cliente_id").isNotNull && col("plano_id").isNotNull)
+    val loadable = resolved.frame.filter(contratoOk)
       .select(
         col("cliente_id"), col("plano_id"),
         // Q5: falsy default — 0 and null both become 10 (etl_process.py:120)
@@ -113,38 +167,31 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
         // Q6: UF[:2] truncation bug reproduced (etl_process.py:123)
         substring(coalesce(col("UF"), lit("")), 1, 2).as("endereco_uf"),
         lit(1).as("status_id")) // Q7: input Status ignored
-      .persist() // count + append: one computation, two actions
 
     append(loadable, "tbl_cliente_contratos")
-    val n = loadable.count()
-    loadable.unpersist()
-    (n, rejects)
+    (resolved.counts._1, rejects)
   }
 
   /** L10: unpivot the three contact columns to rows
     * (`etl_process.py:145–191`); tipo ids per the seeded dimension
     * (Telefones→1, Celulares→2, Emails→3). The NaN-skip filter maps to
-    * a null filter; values are trimmed as the reference does. */
+    * a null filter; values are trimmed as the reference does. Reads the
+    * batch's resolved frame, so `clean` carries `Plano` as well. */
   def loadContatos(clean: DataFrame): (Long, DataFrame) = {
-    val clientes = broadcast(clienteIds)
-    val withCliente = clean.join(clientes, Seq("cpf_cnpj"), "left")
-
-    val rejects = withCliente.filter(col("cliente_id").isNull)
+    val frame = resolve(clean).frame
+    val rejects = frame.filter(!clienteFound)
       .select(clean.columns.map(c => col(s"`$c`")) :+
         lit("Cliente não encontrado").as("erro"): _*)
 
-    val contatos = withCliente.filter(col("cliente_id").isNotNull)
+    val contatos = frame.filter(clienteFound)
       .select(col("cliente_id"),
         expr("stack(3, 1, Telefones, 2, Celulares, 3, Emails)")
           .as(Seq("tipo_contato_id", "contato")))
       .filter(col("contato").isNotNull)
       .select(col("cliente_id"), col("tipo_contato_id"),
         trim(col("contato")).as("contato"))
-      .persist() // count + append: one computation, two actions
 
     append(contatos, "tbl_cliente_contatos")
-    val n = contatos.count()
-    contatos.unpersist()
-    (n, rejects)
+    (contatos.count(), rejects)
   }
 }

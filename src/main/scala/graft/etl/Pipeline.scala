@@ -1,5 +1,6 @@
 package graft.etl
 
+import java.sql.DriverManager
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,6 +24,12 @@ object Pipeline {
       contratosRejeitados: Long, contatosRejeitados: Long,
       rejects: DataFrame)
 
+  /** Imports one workbook. On success ONE frame stays persisted for the
+    * caller: the batch's FK-resolved frame, which `Summary.rejects`
+    * reads — without it a reject read would re-run the xlsx lineage
+    * against a sink the import has since changed. Release it with
+    * `spark.catalog.clearCache()` when the rejects are no longer needed.
+    * On failure nothing stays persisted. */
   def run(spark: SparkSession, xlsxPath: String, jdbcUrl: String,
       props: Properties = new Properties, sheet: Option[String] = None): Summary = {
     val reader = spark.read.format("xlsx").schema(Schemas.fixtureSchema)
@@ -32,24 +39,31 @@ object Pipeline {
       .persist(StorageLevel.MEMORY_AND_DISK) // single materialization (fixes Q9)
 
     val load = new Load(spark, jdbcUrl, props)
-    // ordering contract (README.md:118 / etl_process.py:219–222):
-    // plans → clients → contracts → contacts, sequential actions
-    load.upsertPlanos(clean)
-    load.upsertClientes(clean)
-    val (nContratos, rejContratos0) = load.loadContratos(clean)
-    val (nContatos, rejContatos0) = load.loadContatos(clean)
-    // persisted: counted below AND potentially shown by the caller
-    // after `clean` is unpersisted — without this the whole xlsx+JDBC
-    // lineage would re-execute per action
-    val rejContratos = rejContratos0.persist(StorageLevel.MEMORY_AND_DISK)
-    val rejContatos = rejContatos0.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // ordering contract (README.md:118 / etl_process.py:219–222):
+      // plans → clients → contracts → contacts, sequential actions
+      load.upsertPlanos(clean)
+      load.upsertClientes(clean)
+      val (nContratos, rejContratos) = load.loadContratos(clean)
+      val (nContatos, rejContatos) = load.loadContatos(clean)
+      val (nRejContratos, nRejContatos) = load.rejectCounts(clean)
+      Summary(sinkCount(jdbcUrl, props, "tbl_planos"),
+        sinkCount(jdbcUrl, props, "tbl_clientes"), nContratos, nContatos,
+        nRejContratos, nRejContatos, rejContratos.union(rejContatos))
+    } catch {
+      case e: Throwable =>
+        load.release()
+        throw e
+    } finally clean.unpersist()
+  }
 
-    val planos = spark.read.jdbc(jdbcUrl, "tbl_planos", props).count()
-    val clientes = spark.read.jdbc(jdbcUrl, "tbl_clientes", props).count()
-    val rejects = rejContratos.union(rejContatos)
-    val summary = Summary(planos, clientes, nContratos, nContatos,
-      rejContratos.count(), rejContatos.count(), rejects)
-    clean.unpersist()
-    summary
+  /** `SELECT COUNT(*)` of a sink table over a driver-side connection. */
+  private def sinkCount(jdbcUrl: String, props: Properties, table: String): Long = {
+    val conn = DriverManager.getConnection(jdbcUrl, props)
+    try {
+      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
+      rs.next()
+      rs.getLong(1)
+    } finally conn.close()
   }
 }

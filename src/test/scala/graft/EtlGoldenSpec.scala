@@ -6,9 +6,10 @@ import java.util.Properties
 import org.apache.spark.sql.functions._
 import graft.etl.{Clean, Pipeline, Schemas}
 
-/** Golden end-to-end ETL assertions, SINK-PARAMETERIZED: the real
-  * 1,200-row fixture through xlsx → clean → dedup → 6-table load into
-  * whatever JDBC sink the concrete subclass provisions, asserting the
+/** Golden end-to-end ETL assertions, SINK-PARAMETERIZED: the 1,200-row
+  * fixture ([[GoldenFixture]]: the paper's upload, or its generated
+  * stand-in when absent) through xlsx → clean → dedup → 6-table load
+  * into whatever JDBC sink the concrete subclass provisions, asserting the
   * counts the reference's run produces (FIXTURES.md §1 golden
   * expectations: 16 planos, 1,198 clientes/contratos, 0 rejects) plus
   * the quirk outputs Q5–Q7.
@@ -28,7 +29,7 @@ import graft.etl.{Clean, Pipeline, Schemas}
   */
 abstract class EtlGoldenSuite extends SparkTestBase {
 
-  protected val fixture = "/root/reference/uploads/dados_importacao.xlsx"
+  protected val fixture: String = GoldenFixture.path
   protected val props = new Properties
 
   /** Connection url of a PROVISIONED sink (schema applied, dimensions
@@ -129,6 +130,26 @@ abstract class EtlGoldenSuite extends SparkTestBase {
     assert(errs(goodCpf) == "Plano não encontrado")
     assert(table("tbl_cliente_contratos").count() == before + 1)
   }
+
+  test("contact reject channel: an unknown cliente's contacts carry the reference's error string") {
+    summary
+    import spark.implicits._
+    val goodCpf = table("tbl_clientes").select("cpf_cnpj")
+      .orderBy("cpf_cnpj").limit(1).collect()(0).getString(0)
+    val before = table("tbl_cliente_contatos").count()
+    val rows = Seq( // (cpf_cnpj, Telefones, Celulares, Emails)
+      ("00000000000099", Some("551130000001"), Some("5511900000001"), Some("fantasma@da.br")),
+      (goodCpf, None, Some("5511900000002"), Some(" novo@da.br "))
+    ).toDF("cpf_cnpj", "Telefones", "Celulares", "Emails")
+      .withColumn("Plano", lit("Plano Fantasma"))
+    val (n, rejects) = new graft.etl.Load(spark, jdbcUrl, props).loadContatos(rows)
+    val errs = rejects.select(col("cpf_cnpj"), col("erro")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(n == 2) // the known cliente's two non-null contacts
+    assert(errs == Map("00000000000099" -> "Cliente não encontrado"))
+    assert(table("tbl_cliente_contatos").count() == before + 2)
+    assert(table("tbl_cliente_contatos").filter(col("contato") === "novo@da.br").count() == 1)
+  }
 }
 
 /** Variant A: inline DDL with the FULL constraint surface — identity
@@ -211,5 +232,19 @@ class EtlSchemaSetupGoldenSpec extends EtlGoldenSuite {
     val url = s"jdbc:derby:/tmp/graft-derby-setup-${System.nanoTime()}"
     graft.etl.SchemaSetup(url)
     url
+  }
+
+  // Only here: the shipped DDL has no UNIQUE on the contact triple (the
+  // reference's has, and skips duplicates row by row), so re-loaded
+  // contacts do not collide.
+  test("re-importing the same file adds no cliente, reloads every contract, rejects nothing") {
+    summary
+    val again = Pipeline.run(spark, fixture, jdbcUrl, props)
+    assert(again.planos == 16)
+    assert(again.clientes == 1198)
+    assert(again.contratos == 1198)
+    assert(again.contratosRejeitados == 0 && again.contatosRejeitados == 0)
+    assert(again.rejects.count() == 0)
+    assert(again.contatos == summary.contatos)
   }
 }

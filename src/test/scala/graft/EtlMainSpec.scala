@@ -4,11 +4,11 @@ import graft.etl.{EtlMain, SchemaSetup}
 
 /** CLI-surface test: EtlMain's flow mirrors `importador.py` — upload
   * validation, sheet enumeration + 5-row preview (`importador.py:30–42`),
-  * pipeline run, result report — against the real fixture and a fresh
+  * pipeline run, result report — against the golden fixture and a fresh
   * embedded Derby sink. */
 class EtlMainSpec extends SparkTestBase {
 
-  private val fixture = "/root/reference/uploads/dados_importacao.xlsx"
+  private val fixture = GoldenFixture.path
 
   test("EtlMain previews every sheet and reports the golden summary") {
     val url = s"jdbc:derby:/tmp/graft-etlmain-${System.nanoTime()}"

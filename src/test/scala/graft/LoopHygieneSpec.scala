@@ -6,9 +6,8 @@ import graft.ops.{GraphQueries, PipelineCache}
   * consumed and [[PipelineCache.releaseAll]] runs, the session must be
   * as the query found it — no persisted RDD left behind by a loop
   * round, no `spark.sql.*` conf changed by the loop scope, no temp view
-  * registered. A leak here is invisible to answer checks but grows a
-  * long-lived session (the bench sweeps, a notebook) query by query. */
-class LoopHygieneSpec extends SparkTestBase {
+  * registered. */
+class LoopHygieneSpec extends SessionHygiene {
 
   /** Every registered query that runs a convergence loop. */
   val LoopQueries: Seq[String] = Seq(
@@ -16,21 +15,6 @@ class LoopHygieneSpec extends SparkTestBase {
     "graph_lpa_converged", "graph_scc_pivot", "graph_topo_layers",
     "graph_scc_full", "graph_condensation_dag",
     "dedup_cluster_converged", "dedup_cluster_labels", "dedup_cluster_sizes")
-
-  /** Persisted RDD ids, read WITHOUT a GC first. The context tracks
-    * persisted RDDs through weak references, so a collection would drop
-    * pins that are merely unreachable — but their blocks stay resident
-    * until some later GC lets the cleaner run, and in a large heap that
-    * can be never within a session. Every pin a query makes must be
-    * freed explicitly, by its loop or by `releaseAll`. */
-  private def persistedRdds(): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  private def sqlConfs(): Map[String, String] =
-    spark.conf.getAll.filter(_._1.startsWith("spark.sql."))
-
-  private def tempViews(): Set[String] =
-    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
 
   for (name <- LoopQueries) {
     test(s"$name leaves no persisted RDD, sql conf or temp view behind") {
@@ -41,8 +25,7 @@ class LoopHygieneSpec extends SparkTestBase {
       Bench.consume(SparkEntry.queries(name)(spark, sfDir))
       PipelineCache.releaseAll()
       val leaked = persistedRdds() -- rdds0
-      assert(leaked.isEmpty, "persisted RDDs left behind: " +
-        leaked.toSeq.sorted.flatMap(spark.sparkContext.getPersistentRDDs.get).mkString("; "))
+      assert(leaked.isEmpty, "persisted RDDs left behind: " + describeRdds(leaked))
       assert(sqlConfs() == confs0)
       assert(tempViews() == views0)
     }
