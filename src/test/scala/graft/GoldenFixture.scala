@@ -15,11 +15,17 @@ import scala.collection.mutable
   * 1,200 rows: 1,198 customers with distinct CPFs written formatted, and
   * 2 more rows repeating a CPF digits-only, each after its original:
   * one with an earlier signup, one with a later one, so neither a
-  * first-row nor a last-row rule picks both earliest-signup survivors. It carries exactly the 16
-  * (Plano, valor) pairs, phones as numeric cells, CEP and Número mixed
-  * numeric/string, full state names ("São Paulo" among them) and the
-  * fixture's per-column null counts; phones, cell phones and emails are
-  * all present. Written with JDK zip + hand-built SpreadsheetML.
+  * first-row nor a last-row rule picks both earliest-signup survivors;
+  * both repeats' signups stay inside the profiled range. It carries
+  * exactly the 16 (Plano, valor) pairs, valor 70.00 … 169.90 with both
+  * ends present, phones as numeric cells, CEP and Número mixed
+  * numeric/string, full state names ("São Paulo" among them), 5
+  * Vencimento values and the fixture's per-column null counts; phones,
+  * cell phones and emails are all present. The profiled date ranges are
+  * met exactly: customer 0 has the earliest birth date (1901-06-29) and
+  * signup (2020-07-16), customer 1 the latest (2095-04-11, 2023-05-25),
+  * and neither birth date is nulled. Written with JDK zip + hand-built
+  * SpreadsheetML.
   */
 object GoldenFixture {
 
@@ -28,6 +34,10 @@ object GoldenFixture {
   /** Rows and distinct customers of the stand-in. */
   private val Rows = 1200
   private val Customers = 1198
+
+  /** Customers repeated by a digits-only row, with the repeat's signup
+    * shift in days. */
+  private val Repeats = Map(400 -> -30, 900 -> 30)
 
   lazy val path: String =
     if (Files.exists(Paths.get(ReferenceUpload))) ReferenceUpload
@@ -49,11 +59,11 @@ object GoldenFixture {
     "Emails" -> 33, "Endereço" -> 2, "Complemento" -> 75, "CEP" -> 1,
     "Isento" -> 1194)
 
-  /** The 16 (Plano, valor) pairs, valor in 70.0 … 169.9. */
+  /** The 16 (Plano, valor) pairs, valor 70.00 … 169.90 in steps of 6.66. */
   private val Plans: IndexedSeq[(String, BigDecimal)] = {
     val speeds = Seq("50MB", "100MB", "200MB", "300MB", "400MB", "500MB", "600MB", "1GB")
     for ((s, i) <- speeds.zipWithIndex; (k, j) <- Seq("FIBRA_99_NOVO", "FIBRA_PLUS").zipWithIndex)
-      yield (s"${s}_PLA_ITA_$k", BigDecimal(70) + BigDecimal(i * 13 + j * 6) + BigDecimal("0.90"))
+      yield (s"${s}_PLA_ITA_$k", BigDecimal("70.00") + BigDecimal("6.66") * (2 * i + j))
   }.toIndexedSeq
 
   private val First = IndexedSeq("Nicolas", "Antonio", "Maria", "Ana", "João",
@@ -110,12 +120,27 @@ object GoldenFixture {
       val ddd = 11 + r.nextInt(88)
       val (plano, valor) = Plans(if (id < Plans.size) id else r.nextInt(Plans.size))
       val cep = 10000000L + r.nextInt(89999999)
+      // customers 0 and 1 carry the profiled extremes, signed up at noon so
+      // the day shows the same in any time zone; a repeated customer's
+      // signup leaves room for its repeat's shift
+      val nasc = id match {
+        case 0 => nascLo
+        case 1 => nascHi
+        case _ => nascLo + r.nextLong(nascHi - nascLo + 1)
+      }
+      val cad = id match {
+        case 0 => cadLo + 0.5
+        case 1 => cadHi + 0.5
+        case _ =>
+          val margin = math.abs(Repeats.getOrElse(id, 0))
+          cadLo + margin + r.nextLong(cadHi - cadLo - 2 * margin + 1) + r.nextInt(24) / 24.0
+      }
       Map[String, Cell](
         "Nome/Razão Social" -> str(s"$first $last"),
         "Nome Fantasia" -> str(s"Loja $last"),
         "CPF/CNPJ" -> str(s"${digits.take(3)}.${digits.slice(3, 6)}.${digits.slice(6, 9)}-${digits.drop(9)}"),
-        "Data Nasc." -> num((nascLo + r.nextLong(nascHi - nascLo + 1)).toDouble),
-        "Data Cadastro cliente" -> num((cadLo + r.nextLong(cadHi - cadLo + 1)) + r.nextInt(24) / 24.0),
+        "Data Nasc." -> num(nasc.toDouble),
+        "Data Cadastro cliente" -> num(cad),
         "Celulares" -> num((5500000000000L + ddd * 1000000000L + 900000000L + r.nextInt(100000000)).toDouble),
         "Telefones" -> num((550000000000L + ddd * 100000000L + 30000000L + r.nextInt(60000000)).toDouble),
         "Emails" -> str(s"${first.toLowerCase.filter(c => c >= 'a' && c <= 'z')}${r.nextInt(100)}@da.br"),
@@ -132,20 +157,22 @@ object GoldenFixture {
         "Status" -> str(if (id < 115) "Ativo" else "Velocidade Reduzida"),
         "Isento" -> str("Sim"))
     }
-    def repeat(of: Int, days: Int): Map[String, Cell] = {
+    def repeat(of: Int): Map[String, Cell] = {
       val c = customers(of)
       val (Some(Right(cpfFormatted)), Some(Left(cad))) =
         (c("CPF/CNPJ"), c("Data Cadastro cliente")): @unchecked
       c ++ Map("CPF/CNPJ" -> str(cpfFormatted.filter(_.isDigit)),
-        "Data Cadastro cliente" -> num(cad + days))
+        "Data Cadastro cliente" -> num(cad + Repeats(of)))
     }
     val out = customers.clone()
-    out.insert(1000, repeat(900, days = 30))
-    out.insert(600, repeat(400, days = -30))
-    // the fixture's exact null counts, at seeded positions
+    out.insert(1000, repeat(900))
+    out.insert(600, repeat(400))
+    // the fixture's exact null counts, at seeded positions; rows 0 and 1
+    // (customers 0 and 1) keep their extreme birth dates
     val nulled = out.map(_.to(mutable.Map))
     Nulls.toSeq.sortBy(_._1).foreach { case (h, n) =>
-      shuffled(r, Rows).take(n).foreach(i => nulled(i)(h) = None)
+      shuffled(r, Rows).filterNot(i => h == "Data Nasc." && i < 2).take(n)
+        .foreach(i => nulled(i)(h) = None)
     }
     nulled.map(_.toMap).toIndexedSeq
   }

@@ -434,7 +434,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming upsert sink: golden-fixture replay with forced batch retries " +
       "equals the batch loader's tables") {
     // r7 verdict #4: the streaming counterpart of the reference's L3/L4
-    // insert-if-absent. The REAL 1,198-row cleaned fixture streams in
+    // insert-if-absent. The 1,198-row cleaned golden fixture streams in
     // three OVERLAPPING micro-batches (re-presented keys exercise
     // first-writer-wins), then both replay shapes are forced — a clean
     // replay of a committed batch id (ledger no-op) and the
@@ -466,7 +466,7 @@ class StreamingSpec extends SparkTestBase {
     val urlBatch = provision("b")
     val cleaned = graft.etl.Clean.dedupDeterministic(graft.etl.Clean.transform(
       spark.read.format("xlsx").schema(graft.etl.Schemas.fixtureSchema)
-        .load("/root/reference/uploads/dados_importacao.xlsx")))
+        .load(GoldenFixture.path)))
     val load = new graft.etl.Load(spark, urlBatch)
     load.upsertPlanos(cleaned)
     load.upsertClientes(cleaned)
@@ -534,7 +534,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("upsert sink: checkpoint restart replays the uncommitted batch as a no-op") {
     // The REAL replay path, not a hand-invoked one: run a checkpointed
-    // file-source stream through the sink, then simulate a crash in the
+    // file-source stream of the golden fixture's cleaned plan pairs
+    // ([[GoldenFixture]]) through the sink, then simulate a crash in the
     // window after the sink committed but before the engine wrote its
     // commit marker (delete the latest checkpoint commit), and restart.
     // Structured Streaming re-presents that batch with the SAME id; the
@@ -550,7 +551,7 @@ class StreamingSpec extends SparkTestBase {
     finally conn.close()
     val cleaned = graft.etl.Clean.dedupDeterministic(graft.etl.Clean.transform(
       spark.read.format("xlsx").schema(graft.etl.Schemas.fixtureSchema)
-        .load("/root/reference/uploads/dados_importacao.xlsx")))
+        .load(GoldenFixture.path)))
       .select(col("Plano").as("descricao"), col("Plano_Valor").as("valor"))
     val srcDir = java.nio.file.Files.createTempDirectory("graft-ups-src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ups-ckpt").toString

@@ -4,12 +4,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.etl.Schemas
 
-/** XlsxSource against the REAL reference fixture (1,200 rows × 20 cols;
-  * profile facts in FIXTURES.md §1 were measured with the reference's
-  * own pandas reader — this pins our reader to the same observations). */
+/** XlsxSource against the golden fixture (1,200 rows × 20 cols;
+  * [[GoldenFixture]]: the paper's upload, or its generated stand-in when
+  * absent). The profile facts in FIXTURES.md §1 were measured on the
+  * upload with the reference's own pandas reader; this pins our reader to
+  * the same observations. */
 class XlsxSourceSpec extends SparkTestBase {
 
-  private val fixture = "/root/reference/uploads/dados_importacao.xlsx"
+  private val fixture = GoldenFixture.path
 
   private lazy val raw = spark.read.format("xlsx")
     .schema(Schemas.fixtureSchema).load(fixture)
