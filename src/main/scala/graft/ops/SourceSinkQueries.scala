@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Source/sink format coverage (SURVEY §2.3 "Scans/sources/sinks"):
   * CSV and JSON(lines) writers + readers exercised as roundtrips inside
@@ -77,8 +78,11 @@ object SourceSinkQueries {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_rt_${jvmTag}_part_" +
       d.replaceAll("[^a-zA-Z0-9]", "_")
     src.write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(path)
-    // the two pruned-in languages exist in the corpus (en, de)
-    s.read.parquet(path)
+    // read back with the schema just written (partition column last), so
+    // the read starts no inference job; the two pruned-in languages exist
+    // in the corpus (en, de)
+    val written = StructType(src.schema.filterNot(_.name == "lang") :+ src.schema("lang"))
+    s.read.schema(written).parquet(path)
       .filter(col("lang").isin("en", "de"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("chars"))

@@ -1,12 +1,6 @@
 package graft
 
 import java.sql.DriverManager
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.etl.{Pipeline, SchemaSetup}
 import graft.ops.PipelineCache
@@ -22,26 +16,6 @@ class PipelineHygieneSpec extends SessionHygiene {
     val url = s"jdbc:derby:/tmp/graft-derby-hygiene-${System.nanoTime()}"
     SchemaSetup(url)
     url
-  }
-
-  /** Runs `f` and returns its result with one line per Spark job it
-    * started, in start order: the job's description or call site. */
-  private def jobsOf[T](f: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Seq("spark.job.description", "callSite.short")
-          .flatMap(k => Option(e.properties).flatMap(p => Option(p.getProperty(k))))
-          .headOption.getOrElse(s"job ${e.jobId}"))
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      ListenerBusDrain(sc)
-      (r, jobs.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a warm import runs at most 16 Spark jobs and leaves one persisted frame") {

@@ -1,9 +1,18 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+
 /** What a query or import must leave as it found it in the shared
   * session: the persisted RDDs, the `spark.sql.*` confs and the temp
-  * views. A leak here is invisible to answer checks but grows a
-  * long-lived session (the bench sweeps, a notebook) run by run. */
+  * views — and which Spark jobs it started on the way. A leak here is
+  * invisible to answer checks but grows a long-lived session (the bench
+  * sweeps, a notebook) run by run. */
 trait SessionHygiene extends SparkTestBase {
 
   /** Persisted RDD ids, read WITHOUT a GC first. The context tracks
@@ -17,9 +26,29 @@ trait SessionHygiene extends SparkTestBase {
   protected def describeRdds(ids: Set[Int]): String =
     ids.toSeq.sorted.flatMap(spark.sparkContext.getPersistentRDDs.get).mkString("; ")
 
-  protected def sqlConfs(): Map[String, String] =
-    spark.conf.getAll.filter(_._1.startsWith("spark.sql."))
+  protected def sqlConfs(session: SparkSession = spark): Map[String, String] =
+    session.conf.getAll.filter(_._1.startsWith("spark.sql."))
 
   protected def tempViews(): Set[String] =
     spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  /** Runs `f` and returns its result with one line per Spark job it
+    * started, in start order: the job's description or call site. */
+  protected def jobsOf[T](f: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Seq("spark.job.description", "callSite.short")
+          .flatMap(k => Option(e.properties).flatMap(p => Option(p.getProperty(k))))
+          .headOption.getOrElse(s"job ${e.jobId}"))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      ListenerBusDrain(sc)
+      (r, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
