@@ -5,13 +5,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.CpfClean.cpfClean
+
 /** Transform phase — the reference's `etl_transformacao`
   * (`/root/reference/etl_process.py:194–215`) re-expressed as one
   * declarative projection + a deterministic dedup.
   *
   * Quirk policy (SURVEY §1.4):
   *  - Q1 header normalization: reproduced exactly.
-  *  - Q2 cpf/cnpj digit-strip: reproduced exactly.
+  *  - Q2 cpf/cnpj digit-strip (`etl_process.py:10–11`): reproduced
+  *    exactly by the native `CpfClean` expression.
   *  - Q3 phone clean: CANONICALIZED — digits-only, null stays null (the
   *    reference leaves float artifacts and the literal "nan"; our
   *    source reads phones as strings so there is nothing to mangle).
@@ -30,11 +33,8 @@ object Clean {
   def normalizeHeaders(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(Schemas.normalizeHeader): _*)
 
-  /** Quirk Q2 (`etl_process.py:10–11`): strip every non-digit. */
-  def digitsOnly(c: Column): Column = regexp_replace(c, "[^0-9]", "")
-
   /** Canonicalized Q3: digits-only, empty → null, null → null. */
-  def cleanPhone(c: Column): Column = nullif(digitsOnly(c), lit(""))
+  def cleanPhone(c: Column): Column = nullif(cpfClean(c), lit(""))
 
   /** The full transform over the (header-normalized) typed input.
     * One `select` (not stacked withColumns — SURVEY §3.2): every output
@@ -48,7 +48,7 @@ object Clean {
       // so keeping it alongside the cleaned lower-case column would make
       // every later reference ambiguous (the reference keeps both in
       // case-sensitive pandas but never reads the raw one again)
-      digitsOnly(col("CPF_CNPJ")).as("cpf_cnpj"),
+      cpfClean(col("CPF_CNPJ")).as("cpf_cnpj"),
       col("Data_Nasc"), // typed DateType at the source
       // the reference `to_date`s the timestamp (etl_process.py:208) —
       // the stored value is the calendar date (midnight timestamp)

@@ -1,523 +1,10 @@
 package graft
 
-import graft.multimodal.Multimodal
-import graft.multimodal.Multimodal.{MediaMeta, MediaRow}
+import graft.ops.MultimodalQueries.binaryMeta
 
-/** Spark-side plumbing tests for the multimodal stages (schema, batch
-  * shape, determinism), plus REAL image decode through javax.imageio
-  * (audio/video and unparseable bytes use the documented deterministic
-  * stub). */
+/** The byte-level metadata stage behind `multimodal_binary_meta`: it
+  * reads lengths and hashes only, so it must stay expression-only. */
 class MultimodalSpec extends SparkTestBase {
-
-  import Multimodal._
-
-  /** Encode a PNG in-memory from explicit RGB pixel rows. */
-  private def png(rgbRows: Array[Array[Int]]): Array[Byte] = {
-    val h = rgbRows.length
-    val w = rgbRows.head.length
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgbRows(y)(x))
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
-  test("decodeImage decodes a real PNG pixel-exactly (Rec.601 integer luminance)") {
-    val rgb = Array(
-      Array(0xFF0000, 0x00FF00, 0x0000FF, 0xFFFFFF),
-      Array(0x000000, 0x808080, 0x123456, 0xFEDCBA))
-    val Some((w, h, px)) = decodeImage(png(rgb))
-    assert(w == 4 && h == 2)
-    val expected = rgb.flatten.map { c =>
-      val (r, g, b) = ((c >> 16) & 0xFF, (c >> 8) & 0xFF, c & 0xFF)
-      ((299 * r + 587 * g + 114 * b + 500) / 1000).toByte
-    }
-    assert(px.toSeq == expected.toSeq)
-  }
-
-  test("imageFeatures decodes real PNGs in the distributed pipeline, true dims win") {
-    import spark.implicits._
-    // metadata lies about the dimensions (2×2); the decoder must report
-    // the true decoded 4×2 and feature the real pixels
-    val bytes = png(Array(
-      Array(0xFF0000, 0x00FF00, 0x0000FF, 0xFFFFFF),
-      Array(0x000000, 0x808080, 0x123456, 0xFEDCBA)))
-    val ds = spark.createDataset(Seq(
-      MediaRow(1L, MediaMeta("image", 2, 2, 1, 0), bytes))).repartition(2)
-    val f = imageFeatures(ds).collect().head
-    assert(f.width == 4 && f.height == 2)
-    val lum = Array(0xFF0000, 0x00FF00, 0x0000FF, 0xFFFFFF,
-      0x000000, 0x808080, 0x123456, 0xFEDCBA).map { c =>
-      (299 * ((c >> 16) & 0xFF) + 587 * ((c >> 8) & 0xFF) + 114 * (c & 0xFF) + 500) / 1000
-    }
-    assert(f.mean_intensity == lum.sum.toDouble / 8)
-    assert(f.histogram.sum == 8)
-    lum.foreach(v => assert(f.histogram(v * 16 / 256) > 0))
-  }
-
-  test("resize pools a real PNG at its decoded dimensions") {
-    import spark.implicits._
-    val bytes = png(Array.fill(8)(Array.fill(8)(0x808080))) // uniform gray 8×8
-    val ds = spark.createDataset(Seq(
-      MediaRow(1L, MediaMeta("image", 1, 1, 1, 0), bytes)))
-    val out = resize(ds, 2).collect().head
-    assert(out.meta.width == 4 && out.meta.height == 4)
-    // average-pooling a uniform image is the identity on intensity
-    assert(out.content.forall(b => (b & 0xFF) == (299 * 0x80 + 587 * 0x80 + 114 * 0x80 + 500) / 1000))
-  }
-
-  /** Encode an in-memory WAV (16-bit signed PCM little-endian). */
-  private def wav(samples: Array[Short], rate: Float = 8000f,
-      channels: Int = 1): Array[Byte] = {
-    import javax.sound.sampled._
-    val fmt = new AudioFormat(rate, 16, channels, true, false)
-    val data = new Array[Byte](samples.length * 2)
-    for (i <- samples.indices) {
-      data(2 * i) = (samples(i) & 0xFF).toByte
-      data(2 * i + 1) = ((samples(i) >> 8) & 0xFF).toByte
-    }
-    val ais = new AudioInputStream(new java.io.ByteArrayInputStream(data),
-      fmt, samples.length / channels)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
-  }
-
-  test("decodeWav round-trips 16-bit PCM samples exactly") {
-    val samples = Array[Short](0, 1000, -1000, 32767, -32768, 42)
-    val Some((rate, got)) = decodeWav(wav(samples))
-    assert(rate == 8000)
-    assert(got.toSeq == samples.map(_.toInt).toSeq)
-  }
-
-  test("decodeWav recenters 8-bit unsigned PCM; rejects 16-bit unsigned") {
-    import javax.sound.sampled._
-    def wav8u(samples: Array[Int]): Array[Byte] = {
-      val fmt = new AudioFormat(8000f, 8, 1, false, false) // unsigned 8-bit
-      val data = samples.map(_.toByte)
-      val ais = new AudioInputStream(new java.io.ByteArrayInputStream(data),
-        fmt, samples.length)
-      val bos = new java.io.ByteArrayOutputStream()
-      AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
-    }
-    // 0x80 is unsigned-center silence -> 0 after recentering
-    val Some((_, got)) = decodeWav(wav8u(Array(0x80, 0xFF, 0x00)))
-    assert(got.toSeq == Seq(0, 127, -128))
-  }
-
-  test("decodeWav folds stereo to mono by integer average") {
-    // interleaved L/R frames: (100, 200), (-50, 50), (7, 8)
-    val Some((_, got)) = decodeWav(wav(Array[Short](100, 200, -50, 50, 7, 8),
-      channels = 2))
-    assert(got.toSeq == Seq(150, 0, 7))
-  }
-
-  test("audioFeatures decodes real WAVs; non-audio rows keep the stub shape") {
-    import spark.implicits._
-    val samples = Array[Short](3, -4, 12, 0)
-    val rows = Seq(
-      MediaRow(1L, MediaMeta("audio", 0, 0, 1, 0), wav(samples)),
-      MediaRow(2L, MediaMeta("video", 4, 4, 6, 0), Array[Byte](9, 9)))
-    val f = audioFeatures(spark.createDataset(rows).repartition(2))
-      .collect().sortBy(_.media_id)
-    assert(f(0).sample_rate == 8000 && f(0).n_samples == 4)
-    assert(f(0).duration_s == 4.0 / 8000)
-    assert(f(0).rms == math.sqrt((9 + 16 + 144 + 0).toDouble / 4))
-    assert(f(0).peak == 12)
-    assert(f(1).n_samples == 16) // stub at meta dims (4×4), total pipeline
-  }
-
-  test("VAD segments a silence-tone-silence-tone WAV correctly") {
-    import spark.implicits._
-    // 8000 Hz, 20 ms frames -> 160 samples/frame. Build 12 frames:
-    // 3 silent, 4 loud, 3 silent, 2 loud -> 2 segments, longest 4.
-    def block(n: Int, amp: Short): Array[Short] =
-      Array.tabulate(n * 160)(i => if (i % 2 == 0) amp else (-amp).toShort)
-    val samples = block(3, 0) ++ block(4, 1000) ++ block(3, 0) ++ block(2, 1000)
-    val rows = Seq(MediaRow(1L, MediaMeta("audio", 0, 0, 1, 0), wav(samples)))
-    val v = vadFeatures(spark.createDataset(rows).repartition(2))
-      .collect().head
-    assert(v.sample_rate == 8000)
-    assert(v.n_frames == 12)
-    assert(v.n_active == 6, s"active frames ${v.n_active}")
-    assert(v.active_ratio == 6.0 / 12)
-    assert(v.n_segments == 2, s"segments ${v.n_segments}")
-    assert(v.longest_run == 4)
-    // determinism across partitionings
-    val v1 = vadFeatures(spark.createDataset(rows).repartition(1)).collect().head
-    assert(v == v1)
-  }
-
-  test("ZCR distinguishes a fast alternating tone from a slow one, frame-exact") {
-    import spark.implicits._
-    // 8000 Hz, 20 ms frames -> 160 samples/frame. 4 frames alternating
-    // every sample (one crossing per sample boundary) then 4 frames
-    // alternating every 8 samples (one crossing per 8 samples).
-    val fast = Array.tabulate(4 * 160)(i => if (i % 2 == 0) 1000 else -1000)
-    val slow = Array.tabulate(4 * 160)(i => if ((i / 8) % 2 == 0) 1000 else -1000)
-    val samples = (fast ++ slow).map(_.toShort)
-    val rows = Seq(MediaRow(1L, MediaMeta("audio", 0, 0, 1, 0), wav(samples)))
-    val z = zcrFeatures(spark.createDataset(rows).repartition(2)).collect().head
-    assert(z.sample_rate == 8000 && z.n_frames == 8)
-    // fast half: crossing at every sample boundary inside its 640
-    // samples except the very first sample of the clip (j > 0 guard);
-    // slow half: one crossing every 8 samples = 20/frame
-    assert(z.max_frame_zcr == 159.0 / 160 || z.max_frame_zcr == 1.0,
-      s"max ${z.max_frame_zcr}")
-    // fast: flips at j=1..639 → 639; fast→slow boundary: 1; slow: flips
-    // at every 8th sample after its first block → 640/8 − 1 = 79
-    assert(z.total_crossings == 639 + 1 + 79,
-      s"total ${z.total_crossings}")
-    // the slow (voiced-ish) frames sit below half the clip mean ZCR
-    assert(z.voiced_frames == 4, s"voiced ${z.voiced_frames}")
-    // determinism across partitionings
-    val z1 = zcrFeatures(spark.createDataset(rows).repartition(1)).collect().head
-    assert(z == z1)
-  }
-
-  // ---- minimal ISO-BMFF construction for the container-parse tests ----
-  private def be32(v: Int): Array[Byte] =
-    java.nio.ByteBuffer.allocate(4).putInt(v).array()
-  private def be64(v: Long): Array[Byte] =
-    java.nio.ByteBuffer.allocate(8).putLong(v).array()
-  private def bmffBox(typ: String, payload: Array[Byte]*): Array[Byte] = {
-    val body = payload.flatten.toArray
-    be32(8 + body.length) ++ typ.getBytes("US-ASCII") ++ body
-  }
-  private def stsdBox(format: String): Array[Byte] =
-    bmffBox("stsd", be32(0), be32(1),
-      be32(16) ++ format.getBytes("US-ASCII") ++ Array.fill[Byte](8)(0))
-  private def trakBox(format: String): Array[Byte] =
-    bmffBox("trak", bmffBox("mdia", bmffBox("minf",
-      bmffBox("stbl", stsdBox(format)))))
-
-  test("parseMp4 reads brand, duration, tracks, and codecs from a real box structure") {
-    val ftyp = bmffBox("ftyp", "isom".getBytes, be32(512), "mp42".getBytes)
-    val mvhdV0 = bmffBox("mvhd",
-      be32(0),          // version 0 + flags
-      be32(0), be32(0), // creation, modification
-      be32(1000),       // timescale
-      be32(90500))      // duration → 90.5 s
-    val mp4 = ftyp ++ bmffBox("moov", mvhdV0, trakBox("avc1"), trakBox("mp4a"))
-    val Some(meta) = Multimodal.parseMp4(mp4)
-    assert(meta.major_brand == "isom")
-    assert(meta.timescale == 1000L && meta.duration_units == 90500L)
-    assert(meta.duration_s == 90.5)
-    assert(meta.n_tracks == 2)
-    assert(meta.sample_formats == Seq("avc1", "mp4a"))
-  }
-
-  test("parseMp4 handles version-1 mvhd and 64-bit largesize boxes") {
-    val ftyp = bmffBox("ftyp", "iso6".getBytes, be32(0), "iso6".getBytes)
-    val mvhdV1 = bmffBox("mvhd",
-      Array[Byte](1, 0, 0, 0),  // version 1 + flags
-      be64(0), be64(0),         // creation, modification (64-bit)
-      be32(600),                // timescale
-      be64(1234567L))           // duration (64-bit)
-    // wrap moov as a LARGESIZE box: size=1 marker + 64-bit size
-    val moovBody = mvhdV1 ++ trakBox("hvc1")
-    val largeMoov = be32(1) ++ "moov".getBytes("US-ASCII") ++
-      be64(16L + moovBody.length) ++ moovBody
-    val Some(meta) = Multimodal.parseMp4(ftyp ++ largeMoov)
-    assert(meta.major_brand == "iso6")
-    assert(meta.timescale == 600L && meta.duration_units == 1234567L)
-    assert(meta.n_tracks == 1 && meta.sample_formats == Seq("hvc1"))
-  }
-
-  test("parseMp4 rejects junk, truncated boxes, and non-BMFF streams; videoMeta stays total") {
-    import spark.implicits._
-    assert(Multimodal.parseMp4(Array[Byte](1, 2, 3)).isEmpty)
-    // declared size runs past the buffer → malformed
-    val truncated = be32(100) ++ "ftyp".getBytes ++ Array.fill[Byte](8)(0)
-    assert(Multimodal.parseMp4(truncated).isEmpty)
-    // a valid PNG is not BMFF (no ftyp) → None
-    assert(Multimodal.parseMp4(png(Array(Array(0x808080)))).isEmpty)
-    val ftyp = bmffBox("ftyp", "isom".getBytes, be32(0), "isom".getBytes)
-    val good = ftyp ++ bmffBox("moov",
-      bmffBox("mvhd", be32(0), be32(0), be32(0), be32(1000), be32(2000)),
-      trakBox("avc1"))
-    val rows = Seq(
-      MediaRow(1L, MediaMeta("video", 4, 4, 1, 0), good),
-      MediaRow(2L, MediaMeta("video", 4, 4, 1, 0), Array[Byte](9, 9, 9)))
-    val out = Multimodal.videoMeta(spark.createDataset(rows).repartition(2))
-      .collect().sortBy(_.media_id)
-    assert(out(0).parsed && out(0).duration_s == 2.0 &&
-      out(0).sample_formats == Seq("avc1"))
-    assert(!out(1).parsed && out(1).n_tracks == 0)
-  }
-
-  test("non-image media and unparseable bytes fall back to the deterministic stub") {
-    val junk = MediaRow(1L, MediaMeta("image", 4, 4, 1, 0), Array[Byte](1, 2, 3))
-    val audio = MediaRow(2L, MediaMeta("audio", 4, 4, 1, 44100), png(Array(Array(0xFFFFFF))))
-    assert(decode(junk)._3.toSeq == decodeFake(junk.content, 4, 4).toSeq)
-    assert(decode(audio)._3.toSeq == decodeFake(audio.content, 4, 4).toSeq)
-  }
-
-  private def mediaDs = {
-    import spark.implicits._
-    spark.createDataset((1L to 20L).map { id =>
-      MediaRow(id,
-        MediaMeta("image", width = 8 + (id % 4).toInt * 4, height = 8, n_frames = 6, sample_rate = 0),
-        Array.fill((id % 7).toInt + 3)(id.toByte))
-    }).repartition(4) // multiple partitions: per-partition init path is real
-  }
-
-  test("imageFeatures: one output row per media, histogram sums to pixel count") {
-    val feats = imageFeatures(mediaDs).collect()
-    assert(feats.length == 20)
-    feats.foreach { f =>
-      assert(f.histogram.sum == f.width * f.height)
-      assert(f.mean_intensity >= 0 && f.mean_intensity <= 255)
-    }
-  }
-
-  test("imageFeatures is deterministic across runs and partitionings") {
-    import spark.implicits._
-    val a = imageFeatures(mediaDs).collect().sortBy(_.media_id)
-    val b = imageFeatures(mediaDs.repartition(1)).collect().sortBy(_.media_id)
-    assert(a.map(_.mean_intensity).toSeq == b.map(_.mean_intensity).toSeq)
-    assert(a.map(_.histogram.toSeq).toSeq == b.map(_.histogram.toSeq).toSeq)
-  }
-
-  test("resize pools dimensions down and keeps ids") {
-    val out = resize(mediaDs, 2).collect().sortBy(_.media_id)
-    assert(out.length == 20)
-    out.foreach { m =>
-      assert(m.meta.width >= 1 && m.meta.height == 4)
-      assert(m.content.length == m.meta.width * m.meta.height)
-    }
-  }
-
-  test("sampleFrames fans out every Nth frame as its own row") {
-    val frames = sampleFrames(mediaDs, 2).collect()
-    // 6 frames sampled every 2 → frames 0,2,4 per media
-    assert(frames.length == 20 * 3)
-    assert(frames.map(_.frame_idx).distinct.sorted.toSeq == Seq(0, 2, 4))
-    frames.foreach(f => assert(f.content.nonEmpty))
-  }
-
-  /** Encode an animated GIF in-memory: one full-size grayscale frame per
-    * entry of `levels` (constant pixel value per frame — GIF's 256-color
-    * palette reproduces gray levels exactly). */
-  private def animatedGif(w: Int, h: Int, levels: Seq[Int]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    levels.foreach { v =>
-      // TYPE_INT_RGB with equal channels: the JDK gif WRITER corrupts the
-      // last row of TYPE_BYTE_GRAY sample models (verified empirically);
-      // RGB input round-trips exactly through the generated palette
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-    }
-    writer.endWriteSequence()
-    writer.dispose()
-    ios.close()
-    bos.toByteArray
-  }
-
-  test("decodeGifFrames reads every frame of an animated GIF pixel-exactly") {
-    val levels = Seq(10, 80, 160, 240, 25)
-    val Some((w, h, frames)) = decodeGifFrames(animatedGif(6, 4, levels))
-    assert(w == 6 && h == 4)
-    assert(frames.length == levels.length)
-    frames.zip(levels).foreach { case (px, v) =>
-      // constant gray v → Rec.601 of (v,v,v) is v
-      assert(px.length == 24 && px.forall(b => (b & 0xFF) == v),
-        s"frame level $v decoded as ${px.map(_ & 0xFF).distinct.toSeq}")
-    }
-  }
-
-  test("sampleFrames decodes animated-GIF video rows for real (true frame count)") {
-    import spark.implicits._
-    val levels = Seq(10, 80, 160, 240, 25) // 5 real frames
-    val gif = animatedGif(6, 4, levels)
-    // metadata CLAIMS 99 frames at 3×3 — the real container must win
-    val rows = Seq(MediaRow(7L, MediaMeta("video", 3, 3, 99, 0), gif)).toDS()
-    val frames = sampleFrames(rows, 2).collect().sortBy(_.frame_idx)
-    assert(frames.map(_.frame_idx).toSeq == Seq(0, 2, 4)) // 5 real, every 2nd
-    frames.foreach { f =>
-      assert(f.content.length == 24) // true 6×4, not the claimed 3×3
-      assert(f.content.forall(b => (b & 0xFF) == levels(f.frame_idx)))
-    }
-  }
-
-  test("non-GIF video rows keep the deterministic stub slice") {
-    import spark.implicits._
-    val junk = Array.tabulate[Byte](32)(i => (i * 7).toByte) // not a container
-    val rows = Seq(MediaRow(8L, MediaMeta("video", 4, 3, 4, 0), junk)).toDS()
-    val frames = sampleFrames(rows, 2).collect().sortBy(_.frame_idx)
-    assert(frames.map(_.frame_idx).toSeq == Seq(0, 2)) // metadata frame count
-    frames.foreach(f => assert(f.content.length == 12)) // metadata dims
-  }
-
-  test("dHash is invariant to uniform brightness and resize, far for unrelated") {
-    val rnd = new scala.util.Random(11)
-    def gradient(w: Int, h: Int, boost: Int): Array[Array[Int]] =
-      Array.tabulate(h, w) { (y, x) =>
-        // normalized-coordinate scene, never clipping (max 140+46+8=194),
-        // so a uniform boost shifts every cell equally (gradients intact)
-        val v = 140 * x / (w - 1) + 46 * y / (h - 1) + boost
-        (v << 16) | (v << 8) | v
-      }
-    val base = png(gradient(36, 24, 0))
-    val brighter = png(gradient(36, 24, 8))     // uniform shift: same gradients
-    val larger = png(gradient(72, 48, 0))       // 2× resample of the same scene
-    val noise = png(Array.tabulate(24, 36) { (_, _) =>
-      val v = rnd.nextInt(256); (v << 16) | (v << 8) | v })
-    def hashOf(bytes: Array[Byte]): Long = {
-      val Some((w, h, px)) = decodeImage(bytes)
-      dHash64(w, h, px)
-    }
-    assert(hashOf(base) == hashOf(brighter))
-    assert(java.lang.Long.bitCount(hashOf(base) ^ hashOf(larger)) <= 3)
-    assert(java.lang.Long.bitCount(hashOf(base) ^ hashOf(noise)) > 10)
-  }
-
-  test("phashNearDups pairs only the perceptual near-dups via block join") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(12)
-    def gradient(w: Int, h: Int, boost: Int): Array[Array[Int]] =
-      Array.tabulate(h, w) { (y, x) =>
-        // normalized-coordinate scene, never clipping (max 140+46+8=194),
-        // so a uniform boost shifts every cell equally (gradients intact)
-        val v = 140 * x / (w - 1) + 46 * y / (h - 1) + boost
-        (v << 16) | (v << 8) | v
-      }
-    val rows = Seq(
-      MediaRow(1L, MediaMeta("image", 0, 0, 1, 0), png(gradient(36, 24, 0))),
-      MediaRow(2L, MediaMeta("image", 0, 0, 1, 0), png(gradient(36, 24, 8))),
-      MediaRow(3L, MediaMeta("image", 0, 0, 1, 0), png(Array.tabulate(24, 36) {
-        (_, _) => val v = rnd.nextInt(256); (v << 16) | (v << 8) | v })))
-    val pairs = phashNearDups(spark.createDataset(rows).repartition(2))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(pairs.map(p => (p._1, p._2)).toSeq == Seq((1L, 2L)))
-    assert(pairs.head._3 == 0) // uniform brightness: identical dHash
-    // rejection path: maxHamming beyond the lossless pigeonhole bound
-    intercept[IllegalArgumentException] {
-      phashNearDups(spark.createDataset(rows), maxHamming = 4)
-    }
-  }
-
-  // ---- EBML / WebM container parsing (r7 verdict #5) -----------------
-
-  /** Minimal EBML element encoder: raw ID bytes + minimal-length size
-    * varint + payload. Sizes < 0x7F fit one byte (avoiding the
-    * all-ones unknown-size pattern); larger use the 2-byte form. */
-  private def ebml(id: Array[Int], payload: Array[Byte]): Array[Byte] = {
-    val size =
-      if (payload.length < 0x7F) Array((0x80 | payload.length).toByte)
-      else {
-        require(payload.length < 0x3FFF)
-        Array((0x40 | (payload.length >> 8)).toByte, (payload.length & 0xFF).toByte)
-      }
-    id.map(_.toByte) ++ size ++ payload
-  }
-  private def ebmlStr(id: Array[Int], s: String): Array[Byte] =
-    ebml(id, s.getBytes("US-ASCII"))
-  private def ebmlUint(id: Array[Int], v: Long): Array[Byte] = {
-    val n = math.max(1, (64 - java.lang.Long.numberOfLeadingZeros(v) + 7) / 8)
-    ebml(id, (1 to n).map(i => ((v >> (8 * (n - i))) & 0xFF).toByte).toArray)
-  }
-  private def ebmlF4(id: Array[Int], v: Float): Array[Byte] = {
-    val bits = java.lang.Float.floatToIntBits(v)
-    ebml(id, (1 to 4).map(i => ((bits >> (8 * (4 - i))) & 0xFF).toByte).toArray)
-  }
-  private def ebmlF8(id: Array[Int], v: Double): Array[Byte] = {
-    val bits = java.lang.Double.doubleToLongBits(v)
-    ebml(id, (1 to 8).map(i => ((bits >> (8 * (8 - i))) & 0xFF).toByte).toArray)
-  }
-  private val IdHeader = Array(0x1A, 0x45, 0xDF, 0xA3)
-  private val IdDocType = Array(0x42, 0x82)
-  private val IdSegment = Array(0x18, 0x53, 0x80, 0x67)
-  private val IdInfo = Array(0x15, 0x49, 0xA9, 0x66)
-  private val IdTcScale = Array(0x2A, 0xD7, 0xB1)
-  private val IdDuration = Array(0x44, 0x89)
-  private val IdTracks = Array(0x16, 0x54, 0xAE, 0x6B)
-  private val IdTrackEntry = Array(0xAE)
-  private val IdTrackType = Array(0x83)
-  private val IdCodecId = Array(0x86)
-  private def trackEntry(tpe: Int, codec: String): Array[Byte] =
-    ebml(IdTrackEntry, ebmlUint(IdTrackType, tpe) ++ ebmlStr(IdCodecId, codec))
-  private def webmBytes(docType: String = "webm", tcScale: Long = 1000000L,
-      durationTicks: Either[Float, Double] = Left(2500.0f)): Array[Byte] = {
-    val dur = durationTicks.fold(ebmlF4(IdDuration, _), ebmlF8(IdDuration, _))
-    ebml(IdHeader, ebmlStr(IdDocType, docType)) ++
-      ebml(IdSegment,
-        ebml(IdInfo, ebmlUint(IdTcScale, tcScale) ++ dur) ++
-          ebml(IdTracks, trackEntry(1, "V_VP9") ++ trackEntry(2, "A_OPUS")))
-  }
-
-  test("parseWebm reads DocType, duration, and the track inventory from real EBML") {
-    val Some(m) = parseWebm(webmBytes())
-    assert(m.doc_type == "webm")
-    assert(m.timecode_scale == 1000000L)
-    // 2500 ticks × 1 ms/tick = 2.5 s
-    assert(math.abs(m.duration_s - 2.5) < 1e-9)
-    assert(m.n_tracks == 2)
-    assert(m.track_types == Seq(1, 2))
-    assert(m.codec_ids == Seq("V_VP9", "A_OPUS"))
-  }
-
-  test("parseWebm handles matroska doctype, 8-byte float duration, custom timescale") {
-    // 4000 ticks × 0.5 ms/tick = 2.0 s, double-precision duration
-    val Some(m) = parseWebm(webmBytes("matroska", 500000L, Right(4000.0)))
-    assert(m.doc_type == "matroska")
-    assert(math.abs(m.duration_s - 2.0) < 1e-9)
-    assert(m.codec_ids == Seq("V_VP9", "A_OPUS"))
-  }
-
-  test("parseWebm accepts an unknown-size segment extending to end of stream") {
-    val body = ebml(IdInfo, ebmlUint(IdTcScale, 1000000L) ++
-      ebmlF4(IdDuration, 1000.0f)) ++ ebml(IdTracks, trackEntry(1, "V_VP8"))
-    // size byte 0xFF = all data bits set in the 1-byte form → unknown
-    val seg = IdSegment.map(_.toByte) ++ Array(0xFF.toByte) ++ body
-    val Some(m) = parseWebm(ebml(IdHeader, ebmlStr(IdDocType, "webm")) ++ seg)
-    assert(math.abs(m.duration_s - 1.0) < 1e-9 && m.codec_ids == Seq("V_VP8"))
-  }
-
-  test("parseWebm rejects malformed streams, never throws") {
-    val good = webmBytes()
-    assert(parseWebm(good.dropRight(3)).isEmpty, "truncated stream")
-    assert(parseWebm(Array.empty[Byte]).isEmpty, "empty")
-    assert(parseWebm("not ebml at all".getBytes).isEmpty, "garbage")
-    assert(parseWebm(png(Array(Array(0xFF0000)))).isEmpty, "PNG bytes")
-    // child size overruns its parent: an Info claiming 0x70 payload
-    // bytes inside a Segment that only carries 4
-    val overrun = ebml(IdHeader, ebmlStr(IdDocType, "webm")) ++
-      ebml(IdSegment, IdInfo.map(_.toByte) ++ Array[Byte](0xF0.toByte, 1, 2, 3))
-    assert(parseWebm(overrun).isEmpty, "child overruns parent")
-    // depth bomb: TrackEntry nested 20 deep must hit the recursion cap
-    val bomb = (1 to 20).foldLeft(ebmlUint(IdTrackType, 1)) {
-      (inner, _) => ebml(IdTrackEntry, inner)
-    }
-    assert(parseWebm(ebml(IdHeader, ebmlStr(IdDocType, "webm")) ++
-      ebml(IdSegment, ebml(IdTracks, bomb))).isEmpty, "depth bomb")
-    // a Duration that is not 4 or 8 bytes is malformed
-    val badDur = ebml(IdHeader, ebmlStr(IdDocType, "webm")) ++
-      ebml(IdSegment, ebml(IdInfo, ebml(IdDuration, Array[Byte](1, 2, 3))))
-    assert(parseWebm(badDur).isEmpty, "3-byte float duration")
-    // missing EBML header: structurally valid but not Matroska
-    assert(parseWebm(ebml(IdSegment, ebml(IdTracks,
-      trackEntry(1, "V_VP9")))).isEmpty, "no header/doctype")
-  }
-
-  test("webmMeta gates parseable EBML rows and stubs the rest (pipeline total)") {
-    import spark.implicits._
-    val rows = Seq(
-      MediaRow(1L, MediaMeta("video", 0, 0, 0, 0), webmBytes()),
-      MediaRow(2L, MediaMeta("video", 0, 0, 0, 0), "junk".getBytes))
-    val out = webmMeta(spark.createDataset(rows)).collect().sortBy(_.media_id)
-    assert(out(0).parsed && out(0).doc_type == "webm" &&
-      out(0).n_tracks == 2 && out(0).codec_ids == Seq("V_VP9", "A_OPUS"))
-    assert(!out(1).parsed && out(1).codec_ids.isEmpty)
-  }
 
   test("binaryMeta stays codegen (no decode) and matches byte lengths") {
     import spark.implicits._
@@ -531,189 +18,5 @@ class MultimodalSpec extends SparkTestBase {
     // expression-only stage: no object-boundary operators in the plan
     val plan = binaryMeta(df, "content").queryExecution.executedPlan.toString
     assert(!plan.contains("MapPartitions") && !plan.contains("SerializeFromObject"))
-  }
-
-  // ------------------------------------------------------------------ FLAC
-
-  /** Build a STREAMINFO payload by hand-packing the bit layout. */
-  private def streaminfo(rate: Int, channels: Int, bps: Int,
-      totalSamples: Long): Array[Byte] = {
-    val b = new Array[Byte](34)
-    b(0) = 0x10; b(1) = 0x00; b(2) = 0x10; b(3) = 0x00 // block sizes 4096
-    // bytes 4-9: min/max frame size 0 (unknown)
-    b(10) = (rate >> 12).toByte
-    b(11) = ((rate >> 4) & 0xFF).toByte
-    b(12) = (((rate & 0xF) << 4) | ((channels - 1) << 1) |
-      ((bps - 1) >> 4)).toByte
-    b(13) = ((((bps - 1) & 0xF) << 4) | ((totalSamples >> 32) & 0xF).toInt).toByte
-    b(14) = ((totalSamples >> 24) & 0xFF).toByte
-    b(15) = ((totalSamples >> 16) & 0xFF).toByte
-    b(16) = ((totalSamples >> 8) & 0xFF).toByte
-    b(17) = (totalSamples & 0xFF).toByte
-    (18 until 34).foreach(i => b(i) = (i - 18).toByte) // fake audio md5
-    b
-  }
-
-  private def flacBlock(btype: Int, last: Boolean,
-      payload: Array[Byte]): Array[Byte] =
-    Array(((if (last) 0x80 else 0) | btype).toByte,
-      ((payload.length >> 16) & 0xFF).toByte,
-      ((payload.length >> 8) & 0xFF).toByte,
-      (payload.length & 0xFF).toByte) ++ payload
-
-  private def flacBytes(rate: Int = 44100, channels: Int = 2, bps: Int = 16,
-      totalSamples: Long = 88200L, extraBlocks: Boolean = true): Array[Byte] = {
-    val si = streaminfo(rate, channels, bps, totalSamples)
-    if (extraBlocks)
-      "fLaC".getBytes ++ flacBlock(0, last = false, si) ++
-        flacBlock(4, last = true, "vendor=graft".getBytes)
-    else "fLaC".getBytes ++ flacBlock(0, last = true, si)
-  }
-
-  test("parseFlac reads the full STREAMINFO gate surface") {
-    val Some(m) = parseFlac(flacBytes())
-    assert(m.sample_rate == 44100 && m.n_channels == 2 &&
-      m.bits_per_sample == 16)
-    assert(m.total_samples == 88200L)
-    assert(math.abs(m.duration_s - 2.0) < 1e-12) // 88200 / 44100
-    assert(m.audio_md5 == "000102030405060708090a0b0c0d0e0f")
-    assert(m.block_types == Seq(0, 4))
-  }
-
-  test("parseFlac handles edge widths: mono 8-bit, 36-bit sample counts") {
-    // a >32-bit total-sample count exercises the high nibble of byte 13
-    val big = (1L << 35) + 7L
-    val Some(m) = parseFlac(flacBytes(rate = 8000, channels = 1, bps = 8,
-      totalSamples = big, extraBlocks = false))
-    assert(m.sample_rate == 8000 && m.n_channels == 1 && m.bits_per_sample == 8)
-    assert(m.total_samples == big)
-    assert(m.block_types == Seq(0))
-  }
-
-  test("parseFlac rejects malformed streams, never throws") {
-    assert(parseFlac(Array.empty[Byte]).isEmpty, "empty")
-    assert(parseFlac("not flac at all padding".getBytes).isEmpty, "garbage")
-    assert(parseFlac(flacBytes().dropRight(5)).isEmpty, "truncated tail")
-    // a block length overrunning the buffer
-    val overrun = "fLaC".getBytes ++
-      Array(0x80.toByte, 0x00.toByte, 0x10.toByte, 0x00.toByte) ++
-      streaminfo(44100, 2, 16, 1000L)
-    assert(parseFlac(overrun).isEmpty, "length overrun")
-    // STREAMINFO must come first
-    val tagFirst = "fLaC".getBytes ++
-      flacBlock(4, last = false, "x".getBytes) ++
-      flacBlock(0, last = true, streaminfo(44100, 2, 16, 1L))
-    assert(parseFlac(tagFirst).isEmpty, "STREAMINFO not first")
-    // zero sample rate is invalid per spec
-    assert(parseFlac(flacBytes(rate = 0)).isEmpty, "zero rate")
-    // the reserved invalid block type
-    assert(parseFlac("fLaC".getBytes ++
-      flacBlock(127, last = true, Array.empty)).isEmpty, "type 127")
-  }
-
-  test("flacMeta gates parseable audio rows and stubs the rest") {
-    import spark.implicits._
-    val rows = Seq(
-      MediaRow(1L, MediaMeta("audio", 0, 0, 0, 0), flacBytes()),
-      MediaRow(2L, MediaMeta("audio", 0, 0, 0, 0), "junk".getBytes))
-    val out = flacMeta(spark.createDataset(rows)).collect().sortBy(_.media_id)
-    assert(out(0).parsed && out(0).sample_rate == 44100 &&
-      out(0).audio_md5.nonEmpty && out(0).block_types == Seq(0, 4))
-    assert(!out(1).parsed && out(1).audio_md5.isEmpty)
-  }
-
-  // ---- JPEG container parsing + real decode --------------------------
-
-  private def jpeg(rgbRows: Array[Array[Int]]): Array[Byte] = {
-    val h = rgbRows.length
-    val w = rgbRows.head.length
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgbRows(y)(x))
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", bos)
-    bos.toByteArray
-  }
-
-  private def jpegGradient(w: Int, h: Int): Array[Array[Int]] =
-    Array.tabulate(h, w) { (y, x) =>
-      val v = 140 * x / (w - 1) + 46 * y / (h - 1)
-      (v << 16) | (v << 8) | v
-    }
-
-  test("parseJpeg reads the frame header of a real ImageIO-encoded JPEG") {
-    val bytes = jpeg(jpegGradient(40, 28))
-    val Some(m) = parseJpeg(bytes)
-    assert(m.width == 40 && m.height == 28)
-    assert(m.n_components == 3 && m.precision == 8)
-    assert(!m.progressive)
-    assert(m.has_jfif, "ImageIO's writer emits a JFIF APP0")
-    // the gate's dimensions must agree with the REAL decode behind it
-    val Some((dw, dh, _)) = decodeImage(bytes)
-    assert((dw, dh) == (m.width, m.height))
-  }
-
-  test("JPEG round-trip stays dHash-close to the lossless original") {
-    val scene = jpegGradient(36, 24)
-    val Some((_, _, losslessPx)) = decodeImage(png(scene))
-    val Some((w, h, lossyPx)) = decodeImage(jpeg(scene))
-    val drift = java.lang.Long.bitCount(
-      dHash64(36, 24, losslessPx) ^ dHash64(w, h, lossyPx))
-    // lossy DCT wiggles pixels; the gradient structure must survive
-    assert(drift <= 8, s"dHash drifted $drift bits across JPEG round-trip")
-  }
-
-  private def seg(marker: Int, payload: Array[Byte]): Array[Byte] =
-    Array(0xFF.toByte, marker.toByte,
-      ((payload.length + 2) >> 8).toByte, ((payload.length + 2) & 0xFF).toByte
-    ) ++ payload
-
-  private def sofPayload(w: Int, h: Int, nf: Int): Array[Byte] =
-    Array(8.toByte, (h >> 8).toByte, (h & 0xFF).toByte,
-      (w >> 8).toByte, (w & 0xFF).toByte, nf.toByte) ++
-      Array.fill(3 * nf)(0.toByte)
-
-  test("parseJpeg reads a handcrafted progressive grayscale EXIF stream") {
-    val exifPayload = "Exif\u0000\u0000".getBytes("ISO-8859-1") ++
-      Array.fill(4)(0.toByte)
-    val bytes = Array(0xFF.toByte, 0xD8.toByte) ++
-      seg(0xE1, exifPayload) ++
-      seg(0xC2, sofPayload(123, 45, 1)) ++       // SOF2 = progressive DCT
-      Array(0xFF.toByte, 0xDA.toByte)            // SOS ends the header walk
-    val Some(m) = parseJpeg(bytes)
-    assert(m.width == 123 && m.height == 45 && m.n_components == 1)
-    assert(m.progressive && m.has_exif && !m.has_jfif)
-  }
-
-  test("parseJpeg rejects malformed streams, never throws") {
-    assert(parseJpeg(Array.empty[Byte]).isEmpty, "empty")
-    assert(parseJpeg("not a jpeg".getBytes).isEmpty, "bad magic")
-    val good = jpeg(jpegGradient(16, 16))
-    assert(parseJpeg(good.take(8)).isEmpty, "truncated header")
-    // a segment whose declared length overruns the buffer
-    assert(parseJpeg(Array(0xFF.toByte, 0xD8.toByte) ++
-      seg(0xC0, sofPayload(9, 9, 1)).dropRight(3)).isEmpty, "overrun")
-    // SOS reached without any frame header
-    assert(parseJpeg(Array(0xFF.toByte, 0xD8.toByte,
-      0xFF.toByte, 0xDA.toByte)).isEmpty, "no SOF")
-    // the DNL-deferred zero-height form
-    assert(parseJpeg(Array(0xFF.toByte, 0xD8.toByte) ++
-      seg(0xC0, sofPayload(9, 0, 1)) ++
-      Array(0xFF.toByte, 0xDA.toByte)).isEmpty, "zero height")
-    // a bad SOF component-count/length mismatch
-    assert(parseJpeg(Array(0xFF.toByte, 0xD8.toByte) ++
-      seg(0xC0, sofPayload(9, 9, 1) ++ Array(0.toByte)) ++
-      Array(0xFF.toByte, 0xDA.toByte)).isEmpty, "sof length mismatch")
-  }
-
-  test("jpegMeta gates parseable image rows and stubs the rest") {
-    import spark.implicits._
-    val rows = Seq(
-      MediaRow(1L, MediaMeta("image", 0, 0, 1, 0), jpeg(jpegGradient(20, 12))),
-      MediaRow(2L, MediaMeta("image", 0, 0, 1, 0), "junk".getBytes))
-    val out = jpegMeta(spark.createDataset(rows)).collect().sortBy(_.media_id)
-    assert(out(0).parsed && out(0).width == 20 && out(0).height == 12 &&
-      out(0).n_components == 3 && out(0).has_jfif)
-    assert(!out(1).parsed && out(1).width == 0)
   }
 }
