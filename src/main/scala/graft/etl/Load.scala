@@ -29,10 +29,17 @@ import org.apache.spark.storage.StorageLevel
   * result; both fact loads, both reject channels and every count read
   * that one frame. So per batch each dimension is read twice: its keys
   * before its insert-if-absent, its ids once after. An upsert drops the
-  * resolved frame, since it changes a dimension. The counts are
-  * aggregates over the persisted frame, not `Dataset.observe` metrics
-  * around the writes: on Spark 4.1.2 an `Observation` on a frame
-  * written with `write.jdbc` reported 0 rows for a write of 899.
+  * resolved frame, since it changes a dimension. The counts are one
+  * aggregate over the persisted frame, taken before either fact write,
+  * not `Dataset.observe` metrics around the writes: on Spark 4.1.2 an
+  * `Observation` on a frame written with `write.jdbc` reported 0 rows
+  * for a write of 899.
+  *
+  * `Pipeline.run` calls the two upserts at the same time, then the two
+  * fact loads at the same time, on one `Load`. The resolved frame is
+  * shared by the concurrent fact loads: `resolve` and `release` are
+  * synchronized, so exactly one frame is built and persisted per batch,
+  * and its aggregate runs once while the other load waits for it.
   *
   * Non-atomicity note (SURVEY §7.4): anti-join+append is idempotent per
   * batch but racy under concurrent writers; the reference is
@@ -49,14 +56,23 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
     * executeBatch chunks amortize driver round trips (the reference
     * pays one round trip PER ROW), and at most 8 concurrent writer
     * connections so a wide cluster can't open one connection per task
-    * and overwhelm the database's connection limit. Caller-provided
-    * `props` win. */
+    * and overwhelm the database's connection limit. An embedded Derby
+    * sink gets one writer per table: when two connections insert into a
+    * table whose identity generator is still cold (its first rows since
+    * the database booted), Derby's generator can fail the insert with
+    * 40XL1 after two no-wait lock attempts, and a second table written
+    * at the same time makes that likelier. Caller-provided `props` win.
+    * The frame is coalesced to the writer count here rather than by the
+    * JDBC writer, which would plan it a second time and re-run its
+    * broadcasts. */
   private def append(df: DataFrame, table: String): Unit = {
     val p = new Properties
     p.putAll(props)
     if (!p.containsKey("batchsize")) p.setProperty("batchsize", "10000")
-    if (!p.containsKey("numPartitions")) p.setProperty("numPartitions", "8")
-    df.write.mode(SaveMode.Append).jdbc(url, table, p)
+    if (!p.containsKey("numPartitions"))
+      p.setProperty("numPartitions", if (DerbyVarcharDialect.canHandle(url)) "1" else "8")
+    df.coalesce(p.getProperty("numPartitions").toInt)
+      .write.mode(SaveMode.Append).jdbc(url, table, p)
   }
 
   /** L1+L3: distinct (Plano, Plano_Valor) pairs, insert-if-absent on
@@ -93,8 +109,12 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
   /** A batch resolved against both dimensions: `batch` left-joined to
     * the sink-assigned `cliente_id` (by cpf_cnpj) and `plano_id` (by
     * Plano), persisted. `counts` is one aggregate over it: (loadable
-    * contracts, rejected contracts, rows whose cliente is unknown). It
-    * reads only the two id columns, so a contract-only batch counts too. */
+    * contracts, rejected contracts, rows whose cliente is unknown,
+    * loadable contacts). The contact count is the non-null contact
+    * cells of the rows whose cliente is known, exactly what
+    * `loadContatos` writes (its null filter runs before `trim`); it
+    * counts the contact columns the batch has, so a contract-only batch
+    * counts too. */
   private final class Resolved(val batch: DataFrame) {
     val frame: DataFrame = {
       val clientes = readTable("tbl_clientes")
@@ -106,10 +126,13 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
         .join(broadcast(planos), withCliente("Plano") === planos("descricao"), "left")
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
-    lazy val counts: (Long, Long, Long) = {
-      val r = frame.agg(count(when(contratoOk, 1)), count(when(!contratoOk, 1)),
-        count(when(!clienteFound, 1))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
+    lazy val counts: (Long, Long, Long, Long) = {
+      val contatos = Seq("Telefones", "Celulares", "Emails")
+        .filter(batch.columns.contains)
+        .map(c => count(when(clienteFound && col(c).isNotNull, 1)))
+      val r = frame.agg(count(when(contratoOk, 1)), count(when(!contratoOk, 1)) +:
+        count(when(!clienteFound, 1)) +: contatos: _*).head()
+      (r.getLong(0), r.getLong(1), r.getLong(2), (3 until r.length).map(r.getLong).sum)
     }
   }
 
@@ -118,25 +141,27 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
   /** The resolved form of `clean`, built on first use after the upserts
     * and shared by both fact loads and their reject channels. Keyed on
     * the `clean` frame itself: another batch replaces it. */
-  private def resolve(clean: DataFrame): Resolved = memo match {
-    case Some(r) if r.batch eq clean => r
-    case _ =>
-      release()
-      val r = new Resolved(clean)
-      memo = Some(r)
-      r
+  private def resolve(clean: DataFrame): Resolved = synchronized {
+    memo match {
+      case Some(r) if r.batch eq clean => r
+      case _ =>
+        release()
+        val r = new Resolved(clean)
+        memo = Some(r)
+        r
+    }
   }
 
   /** (rejected contracts, rejected contacts) of `clean`, from the
-    * aggregate `loadContratos` already ran. */
+    * aggregate the fact loads already ran. */
   private[etl] def rejectCounts(clean: DataFrame): (Long, Long) = {
-    val (_, contratos, contatos) = resolve(clean).counts
+    val (_, contratos, contatos, _) = resolve(clean).counts
     (contratos, contatos)
   }
 
   /** Unpersists the resolved frame, if any; its reject frames would
     * then re-read the sink. */
-  private[etl] def release(): Unit = {
+  private[etl] def release(): Unit = synchronized {
     memo.foreach(_.frame.unpersist())
     memo = None
   }
@@ -146,6 +171,7 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
     * — rejects carry the reference's error strings in an `erro` column. */
   def loadContratos(clean: DataFrame): (Long, DataFrame) = {
     val resolved = resolve(clean)
+    val loaded = resolved.counts._1
     val rejects = resolved.frame.filter(!contratoOk)
       .select(clean.columns.map(c => col(s"`$c`")) :+
         when(col("cliente_id").isNull, "Cliente não encontrado")
@@ -169,7 +195,7 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
         lit(1).as("status_id")) // Q7: input Status ignored
 
     append(loadable, "tbl_cliente_contratos")
-    (resolved.counts._1, rejects)
+    (loaded, rejects)
   }
 
   /** L10: unpivot the three contact columns to rows
@@ -178,7 +204,9 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
     * a null filter; values are trimmed as the reference does. Reads the
     * batch's resolved frame, so `clean` carries `Plano` as well. */
   def loadContatos(clean: DataFrame): (Long, DataFrame) = {
-    val frame = resolve(clean).frame
+    val resolved = resolve(clean)
+    val loaded = resolved.counts._4
+    val frame = resolved.frame
     val rejects = frame.filter(!clienteFound)
       .select(clean.columns.map(c => col(s"`$c`")) :+
         lit("Cliente não encontrado").as("erro"): _*)
@@ -192,6 +220,6 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
         trim(col("contato")).as("contato"))
 
     append(contatos, "tbl_cliente_contatos")
-    (contatos.count(), rejects)
+    (loaded, rejects)
   }
 }

@@ -40,12 +40,15 @@ object Pipeline {
 
     val load = new Load(spark, jdbcUrl, props)
     try {
-      // ordering contract (README.md:118 / etl_process.py:219–222):
-      // plans → clients → contracts → contacts, sequential actions
-      load.upsertPlanos(clean)
-      load.upsertClientes(clean)
-      val (nContratos, rejContratos) = load.loadContratos(clean)
-      val (nContatos, rejContatos) = load.loadContatos(clean)
+      // Dependency schedule. The reference loads plans → clients →
+      // contracts → contacts (README.md:118 / etl_process.py:219–222),
+      // but only the sink's FKs order them (FIXTURES.md §2): contracts
+      // reference clients and plans, contacts reference clients. So
+      // the two dimensions load side by side, then the two facts, both
+      // over the batch's one FK-resolved frame.
+      both(load.upsertPlanos(clean), load.upsertClientes(clean))
+      val ((nContratos, rejContratos), (nContatos, rejContatos)) =
+        both(load.loadContratos(clean), load.loadContatos(clean))
       val (nRejContratos, nRejContatos) = load.rejectCounts(clean)
       Summary(sinkCount(jdbcUrl, props, "tbl_planos"),
         sinkCount(jdbcUrl, props, "tbl_clientes"), nContratos, nContatos,
@@ -56,6 +59,38 @@ object Pipeline {
         throw e
     } finally clean.unpersist()
   }
+
+  /** Runs `a` on a thread started for this call and `b` on the
+    * caller's, and returns when both have finished. A fresh thread, not
+    * a pool, so `a`'s jobs carry the caller's Spark local properties
+    * (job group, description, scheduler pool), which `SparkContext`
+    * hands to child threads. If either side throws, the error of `a`,
+    * else of `b`, is rethrown once both are done, with the other side's
+    * error suppressed into it: a failed import has no job still running
+    * when its frames are released. */
+  private def both[A, B](a: => A, b: => B): (A, B) = {
+    var ra: Either[Throwable, A] = null
+    val t = new Thread(() => ra = attempt(a), "graft-etl-load")
+    t.setDaemon(true)
+    t.start()
+    val rb = attempt(b)
+    var interrupted = false
+    while (t.isAlive)
+      try t.join()
+      catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+    (ra, rb) match {
+      case (Right(x), Right(y)) => (x, y)
+      case (Left(e), Right(_)) => throw e
+      case (Right(_), Left(e)) => throw e
+      case (Left(e), Left(other)) =>
+        e.addSuppressed(other)
+        throw e
+    }
+  }
+
+  private def attempt[T](f: => T): Either[Throwable, T] =
+    try Right(f) catch { case e: Throwable => Left(e) }
 
   /** `SELECT COUNT(*)` of a sink table over a driver-side connection. */
   private def sinkCount(jdbcUrl: String, props: Properties, table: String): Long = {

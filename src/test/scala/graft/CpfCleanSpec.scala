@@ -12,14 +12,19 @@ class CpfCleanSpec extends SparkTestBase {
   test("optimizer rule collapses nested cpf_clean to one application") {
     import graft.functions.{CpfClean, CpfCleanIdempotence}
     import org.apache.spark.sql.functions.col
-    CpfCleanIdempotence.install(spark)
+    // installed on a session of its own: the shared session's optimizer
+    // must stay as every later suite expects it
+    val rules0 = spark.sessionState.experimentalMethods.extraOptimizations
+    val session = spark.newSession()
+    CpfCleanIdempotence.install(session)
     // non-foldable source (a literal relation would be constant-folded
     // away before the rule's effect is observable)
-    val df = ops.Tables.customer(spark, sfDir)
+    val df = ops.Tables.customer(session, sfDir)
       .select(CpfClean.cpfClean(CpfClean.cpfClean(col("c_name"))).as("c"))
     val optimized = df.queryExecution.optimizedPlan.toString
     assert("cpf_clean".r.findAllIn(optimized).length == 1, optimized)
     assert(df.limit(1).collect()(0).getString(0).forall(_.isDigit))
+    assert(spark.sessionState.experimentalMethods.extraOptimizations == rules0)
   }
 
   private def ref(s: String): String = s.replaceAll("[^0-9]", "")

@@ -2,14 +2,18 @@ package graft
 
 import java.sql.DriverManager
 
+import org.apache.spark.ListenerBusDrain
+
 import graft.etl.{Pipeline, SchemaSetup}
 import graft.ops.PipelineCache
 
 /** Job count and session hygiene of one warm import: `Pipeline.run` of
   * the golden fixture into a `SchemaSetup` sink that already holds one
-  * import. Each batch is FK-resolved once, so the import runs at most
-  * 16 Spark jobs, and the one frame `Summary.rejects` reads is all it
-  * leaves persisted — on failure, not even that. */
+  * import. Each batch is FK-resolved once and its counts are one
+  * aggregate, so the import runs at most 15 Spark jobs, and the one
+  * frame `Summary.rejects` reads is all it leaves persisted — on
+  * failure, not even that, and no job of it still runs. The loads run
+  * two at a time; the jobs of both carry the caller's job group. */
 class PipelineHygieneSpec extends SessionHygiene {
 
   private def provisioned(): String = {
@@ -28,7 +32,9 @@ class PipelineHygieneSpec extends SessionHygiene {
     val views0 = tempViews()
     val (summary, jobs) = jobsOf(Pipeline.run(spark, GoldenFixture.path, url))
     try {
-      assert(jobs.size <= 16, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
+      // 15 since the contact count joined the counts aggregate; the name
+      // keeps the earlier bound
+      assert(jobs.size <= 15, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
       val added = persistedRdds() -- rdds0
       assert(added.size == 1, "persisted by the import: " + describeRdds(added))
       assert(rdds0.subsetOf(persistedRdds()))
@@ -52,7 +58,29 @@ class PipelineHygieneSpec extends SessionHygiene {
     PipelineCache.releaseAll()
     val rdds0 = persistedRdds()
     intercept[Exception](Pipeline.run(spark, GoldenFixture.path, url))
+    // the status tracker learns of a job's end through the listener bus
+    ListenerBusDrain(spark.sparkContext)
+    val running = spark.sparkContext.statusTracker.getActiveJobIds()
+    assert(running.isEmpty, "jobs still running: " + running.mkString(", "))
     val leaked = persistedRdds() -- rdds0
     assert(leaked.isEmpty, "persisted RDDs left behind: " + describeRdds(leaked))
+  }
+
+  test("the caller's job group is on every job of an import, so cancelJobGroup reaches them") {
+    val url = provisioned()
+    val sc = spark.sparkContext
+    val group = s"graft-import-${System.nanoTime()}"
+    val (_, starts) = jobStartsOf {
+      sc.setJobGroup(group, "golden import")
+      try Pipeline.run(spark, GoldenFixture.path, url)
+      finally {
+        sc.clearJobGroup()
+        spark.catalog.clearCache()
+      }
+    }
+    assert(starts.nonEmpty)
+    val outside = starts.filterNot(e =>
+      Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+    assert(outside.isEmpty, "jobs outside the group: " + outside.map(_.jobId).mkString(", "))
   }
 }

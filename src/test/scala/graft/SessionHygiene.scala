@@ -35,13 +35,19 @@ trait SessionHygiene extends SparkTestBase {
   /** Runs `f` and returns its result with one line per Spark job it
     * started, in start order: the job's description or call site. */
   protected def jobsOf[T](f: => T): (T, Seq[String]) = {
+    val (r, starts) = jobStartsOf(f)
+    (r, starts.map(e => Seq("spark.job.description", "callSite.short")
+      .flatMap(k => Option(e.properties).flatMap(p => Option(p.getProperty(k))))
+      .headOption.getOrElse(s"job ${e.jobId}")))
+  }
+
+  /** Runs `f` and returns its result with the start event of every Spark
+    * job it started, from any thread, in start order. */
+  protected def jobStartsOf[T](f: => T): (T, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[String]
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Seq("spark.job.description", "callSite.short")
-          .flatMap(k => Option(e.properties).flatMap(p => Option(p.getProperty(k))))
-          .headOption.getOrElse(s"job ${e.jobId}"))
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
     }
     ListenerBusDrain(sc)
     sc.addSparkListener(listener)
