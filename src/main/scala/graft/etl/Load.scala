@@ -1,5 +1,6 @@
 package graft.etl
 
+import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -10,8 +11,8 @@ import org.apache.spark.storage.StorageLevel
   * (`/root/reference/etl_process.py:28–191`) re-expressed as
   * set-oriented DataFrame operations (SURVEY §3.3):
   *
-  *  - `ON CONFLICT DO NOTHING` (plans `:40`, clients `:75`) →
-  *    left_anti join against current sink keys, then one batched append.
+  *  - `ON CONFLICT DO NOTHING` (plans `:40`, clients `:75`) → the
+  *    companion object's insert-if-absent core.
   *  - `buscar_id` per-row SELECT (`:53–59`) → broadcast equi-join to the
   *    dimension read back from the sink, once per batch (below).
   *  - per-row SAVEPOINT/ROLLBACK error isolation (`:103,:128`) →
@@ -40,10 +41,6 @@ import org.apache.spark.storage.StorageLevel
   * shared by the concurrent fact loads: `resolve` and `release` are
   * synchronized, so exactly one frame is built and persisted per batch,
   * and its aggregate runs once while the other load waits for it.
-  *
-  * Non-atomicity note (SURVEY §7.4): anti-join+append is idempotent per
-  * batch but racy under concurrent writers; the reference is
-  * single-writer and commits per table, so semantics match.
   */
 class Load(spark: SparkSession, url: String, props: Properties = new Properties) {
 
@@ -52,54 +49,30 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
   private def readTable(name: String): DataFrame =
     spark.read.jdbc(url, name, props)
 
-  /** Sink batching contract, stated rather than defaulted: 10k-row
-    * executeBatch chunks amortize driver round trips (the reference
-    * pays one round trip PER ROW), and at most 8 concurrent writer
-    * connections so a wide cluster can't open one connection per task
-    * and overwhelm the database's connection limit. An embedded Derby
-    * sink gets one writer per table: when two connections insert into a
-    * table whose identity generator is still cold (its first rows since
-    * the database booted), Derby's generator can fail the insert with
-    * 40XL1 after two no-wait lock attempts, and a second table written
-    * at the same time makes that likelier. Caller-provided `props` win.
-    * The frame is coalesced to the writer count here rather than by the
-    * JDBC writer, which would plan it a second time and re-run its
-    * broadcasts. */
-  private def append(df: DataFrame, table: String): Unit = {
-    val p = new Properties
-    p.putAll(props)
-    if (!p.containsKey("batchsize")) p.setProperty("batchsize", "10000")
-    if (!p.containsKey("numPartitions"))
-      p.setProperty("numPartitions", if (DerbyVarcharDialect.canHandle(url)) "1" else "8")
-    df.coalesce(p.getProperty("numPartitions").toInt)
-      .write.mode(SaveMode.Append).jdbc(url, table, p)
-  }
-
   /** L1+L3: distinct (Plano, Plano_Valor) pairs, insert-if-absent on
     * descricao (`etl_process.py:28–49`). Runs on the deduped frame, as
-    * the reference does (`:219` receives df_clean). */
+    * the reference does (`:219` receives df_clean); a plan with several
+    * values keeps its lowest non-null one. */
   def upsertPlanos(clean: DataFrame): Unit = {
     release() // the dimension changes under any resolved frame
-    val novos = clean.select(col("Plano").as("descricao"),
-        col("Plano_Valor").as("valor"))
-      .groupBy("descricao").agg(min("valor").as("valor")) // deterministic pair pick
-    val existing = readTable("tbl_planos").select("descricao")
-    append(novos.join(broadcast(existing), Seq("descricao"), "left_anti"),
-      "tbl_planos")
+    val planos = clean.select(col("Plano").as("descricao"),
+      col("Plano_Valor").as("valor"))
+    Load.insertIfAbsent(Load.pickPerKey(planos, Seq("descricao")), url, "tbl_planos",
+      Seq("descricao"), props)
   }
 
-  /** L4: clients insert-if-absent on cpf_cnpj (`etl_process.py:60–88`). */
+  /** L4: clients insert-if-absent on cpf_cnpj (`etl_process.py:60–88`).
+    * No per-key pick: `clean` comes from [[Clean.dedupDeterministic]],
+    * which already keeps one row per cpf_cnpj. */
   def upsertClientes(clean: DataFrame): Unit = {
     release()
-    val novos = clean.select(
+    val clientes = clean.select(
       col("Nome_Razão_Social").as("nome_razao_social"),
       col("Nome_Fantasia").as("nome_fantasia"),
       col("cpf_cnpj"),
       col("Data_Nasc").as("data_nascimento"),
       col("Data_Cadastro_cliente").as("data_cadastro"))
-    val existing = readTable("tbl_clientes").select("cpf_cnpj")
-    append(novos.join(broadcast(existing), Seq("cpf_cnpj"), "left_anti"),
-      "tbl_clientes")
+    Load.insertIfAbsent(clientes, url, "tbl_clientes", Seq("cpf_cnpj"), props)
   }
 
   // FK-resolution outcome of a row of the resolved frame
@@ -194,7 +167,7 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
         substring(coalesce(col("UF"), lit("")), 1, 2).as("endereco_uf"),
         lit(1).as("status_id")) // Q7: input Status ignored
 
-    append(loadable, "tbl_cliente_contratos")
+    Load.append(loadable, url, "tbl_cliente_contratos", props)
     (loaded, rejects)
   }
 
@@ -219,7 +192,76 @@ class Load(spark: SparkSession, url: String, props: Properties = new Properties)
       .select(col("cliente_id"), col("tipo_contato_id"),
         trim(col("contato")).as("contato"))
 
-    append(contatos, "tbl_cliente_contatos")
+    Load.append(contatos, url, "tbl_cliente_contatos", props)
     (loaded, rejects)
+  }
+}
+
+/** The insert-if-absent core: the reference's `INSERT … ON CONFLICT DO
+  * NOTHING` (`etl_process.py:37–41`, `:72–78`) as one set-oriented
+  * write, for [[Load]]'s upserts and [[graft.streaming.JdbcUpsertSink]].
+  *
+  * Sink batching contract: 10k-row executeBatch chunks amortize driver
+  * round trips (the reference pays one PER ROW), and `numPartitions`
+  * caps the writer connections, each one transaction, at 8, so a wide
+  * cluster can't exhaust the database's connection limit. An embedded
+  * Derby sink gets one writer per table: writers that collide on a table
+  * whose identity generator is cold (its first rows since boot) can
+  * fail with 40XL1. Caller-provided `props` win.
+  *
+  * Non-atomicity note (SURVEY §7.4): anti-join+append is idempotent per
+  * batch but racy under concurrent writers; the reference is
+  * single-writer and commits per table, so semantics match.
+  */
+object Load {
+  /** Appends `df` to `table` under the batching contract. The frame is
+    * coalesced to the writer count here rather than by the JDBC writer,
+    * which would plan it a second time and re-run its broadcasts. */
+  def append(df: DataFrame, url: String, table: String, props: Properties): Unit = {
+    val p = new Properties
+    p.putAll(props)
+    p.putIfAbsent("batchsize", "10000")
+    p.putIfAbsent("numPartitions", if (DerbyVarcharDialect.canHandle(url)) "1" else "8")
+    df.coalesce(p.getProperty("numPartitions").toInt)
+      .write.mode(SaveMode.Append).jdbc(url, table, p)
+  }
+
+  /** One row per `keyCols` value, picked deterministically, so a
+    * replayed batch re-picks the same rows whatever its partition
+    * order: the least row by the other columns, compared in column
+    * order, each ascending with nulls last. With one value column that
+    * is its minimum non-null value. Columns keep `batch`'s order. */
+  def pickPerKey(batch: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val valueCols = batch.columns.filterNot(keyCols.contains).toSeq
+    if (valueCols.isEmpty) batch.dropDuplicates(keyCols)
+    else {
+      // a struct sorts nulls first; a null flag ahead of each value sorts them last
+      val order = valueCols.zipWithIndex.flatMap { case (v, i) =>
+        Seq(col(v).isNull.as(s"n$i"), col(v).as(s"v$i"))
+      }
+      batch.groupBy(keyCols.map(col): _*)
+        .agg(min(struct(order: _*)).as("_pick"))
+        .select(batch.columns.toSeq.map { c =>
+          val i = valueCols.indexOf(c)
+          if (i < 0) col(c) else col("_pick").getField(s"v$i").as(c)
+        }: _*)
+    }
+  }
+
+  /** Appends the rows of `batch` whose `keyCols` are not yet in
+    * `table`: the table's keys, dimension-sized here, are read once and
+    * broadcast into a left-anti join. `batch` holds at most one row per
+    * key; see [[pickPerKey]]. */
+  def insertIfAbsent(batch: DataFrame, url: String, table: String,
+      keyCols: Seq[String], props: Properties): Unit = {
+    DerbyVarcharDialect.ensureRegistered()
+    val existing = batch.sparkSession.read.jdbc(url, table, props).select(keyCols.map(col): _*)
+    append(batch.join(broadcast(existing), keyCols, "left_anti"), url, table, props)
+  }
+
+  /** Runs `f` on a new connection to `url`, authenticated by `props`, then closes it. */
+  def withConnection[T](url: String, props: Properties)(f: Connection => T): T = {
+    val c = DriverManager.getConnection(url, props)
+    try f(c) finally c.close()
   }
 }

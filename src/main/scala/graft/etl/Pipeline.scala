@@ -1,7 +1,8 @@
 package graft.etl
 
-import java.sql.DriverManager
 import java.util.Properties
+
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -50,8 +51,13 @@ object Pipeline {
       val ((nContratos, rejContratos), (nContatos, rejContatos)) =
         both(load.loadContratos(clean), load.loadContatos(clean))
       val (nRejContratos, nRejContatos) = load.rejectCounts(clean)
-      Summary(sinkCount(jdbcUrl, props, "tbl_planos"),
-        sinkCount(jdbcUrl, props, "tbl_clientes"), nContratos, nContatos,
+      val Seq(nPlanos, nClientes) = Load.withConnection(jdbcUrl, props) { c =>
+        Seq("tbl_planos", "tbl_clientes").map(t => Using.resource(c.createStatement()) { st =>
+          val rs = st.executeQuery(s"SELECT COUNT(*) FROM $t")
+          rs.next(); rs.getLong(1)
+        })
+      }
+      Summary(nPlanos, nClientes, nContratos, nContatos,
         nRejContratos, nRejContatos, rejContratos.union(rejContatos))
     } catch {
       case e: Throwable =>
@@ -91,14 +97,4 @@ object Pipeline {
 
   private def attempt[T](f: => T): Either[Throwable, T] =
     try Right(f) catch { case e: Throwable => Left(e) }
-
-  /** `SELECT COUNT(*)` of a sink table over a driver-side connection. */
-  private def sinkCount(jdbcUrl: String, props: Properties, table: String): Long = {
-    val conn = DriverManager.getConnection(jdbcUrl, props)
-    try {
-      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
-      rs.next()
-      rs.getLong(1)
-    } finally conn.close()
-  }
 }

@@ -474,12 +474,14 @@ class StreamingSpec extends SparkTestBase {
     val w = org.apache.spark.sql.expressions.Window.orderBy("cpf_cnpj")
     val indexed = cleaned.withColumn("idx", row_number().over(w)).persist()
     val nRows = indexed.count()
-    // keyIsUnique: the provisioned DDL carries UNIQUE on both key
-    // columns, so the 8-connection parallel append path stays exercised
+    // the provisioned DDL carries UNIQUE on both key columns, so the
+    // 8-connection parallel append path stays exercised
+    val eightWriters = new java.util.Properties
+    eightWriters.setProperty("numPartitions", "8")
     val planoSink = new graft.streaming.JdbcUpsertSink(
-      urlStream, "tbl_planos", Seq("descricao"), keyIsUnique = true)
+      urlStream, "tbl_planos", Seq("descricao"), eightWriters)
     val clienteSink = new graft.streaming.JdbcUpsertSink(
-      urlStream, "tbl_clientes", Seq("cpf_cnpj"), keyIsUnique = true)
+      urlStream, "tbl_clientes", Seq("cpf_cnpj"), eightWriters)
     def planoFrame(b: DataFrame): DataFrame = indexed
       .join(b.select("idx"), "idx")
       .select(col("Plano").as("descricao"), col("Plano_Valor").as("valor"))

@@ -68,8 +68,11 @@ class UpsertReplayFaultSpec extends SparkTestBase {
       val keys = (1 to 200).map(i => s"k$i") ++ fillers :+ "poison"
       val batch = keys.zipWithIndex.map { case (k, i) => (k, i) }.toDF("k", "v")
       val expected = keys.zipWithIndex.sorted
-      val sink = new graft.streaming.JdbcUpsertSink(
-        url, "sink_t", Seq("k"), keyIsUnique = unique)
+      // a UNIQUE key lets the sink take 8 writers; without one it keeps
+      // its single-transaction default
+      val writers = new java.util.Properties
+      if (unique) writers.setProperty("numPartitions", "8")
+      val sink = new graft.streaming.JdbcUpsertSink(url, "sink_t", Seq("k"), writers)
 
       // at test scale AQE coalesces the tiny anti-join output to ONE
       // partition, which would collapse the 8-connection mode into the
