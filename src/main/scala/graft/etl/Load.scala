@@ -41,6 +41,14 @@ import org.apache.spark.storage.StorageLevel
   * shared by the concurrent fact loads: `resolve` and `release` are
   * synchronized, so exactly one frame is built and persisted per batch,
   * and its aggregate runs once while the other load waits for it.
+  *
+  * A `Load` runs on the session it is given, and each core call on the
+  * session of its frame. `Pipeline.run` gives it its import session: a
+  * kept clone of the caller's with adaptive execution off, because AQE
+  * turns each of an import's small actions into several query-stage
+  * jobs. There the caller's shuffle width applies, with no coalescing.
+  * A `QueryExecutionListener` registered on the caller after its first
+  * import does not see the import's queries.
   */
 class Load(spark: SparkSession, url: String, props: Properties = new Properties) {
 

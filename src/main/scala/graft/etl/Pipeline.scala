@@ -5,6 +5,7 @@ import java.util.Properties
 import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.storage.StorageLevel
 
 /** End-to-end ETL: xlsx → clean → deterministic dedup → normalized
@@ -30,16 +31,31 @@ object Pipeline {
     * reads — without it a reject read would re-run the xlsx lineage
     * against a sink the import has since changed. Release it with
     * `spark.catalog.clearCache()` when the rejects are no longer needed.
-    * On failure nothing stays persisted. */
+    * On failure nothing stays persisted.
+    *
+    * Every frame of the import, `Summary.rejects` included, is built on
+    * the import session of `spark` (see `importSession`): a kept
+    * clone of it with adaptive query execution off. A 1,200-row import
+    * is bound by driver time per Spark job, and AQE splits each action
+    * into query-stage jobs, each re-planned and explained: a warm import
+    * runs 9 jobs without it, 15 with it (OPTIMIZATION_r19.md). The plans
+    * are the caller's: its confs apply, shuffles keep its
+    * `spark.sql.shuffle.partitions` width with no coalescing, broadcast
+    * hints stand, so the answers are those of the public `Load` calls on
+    * the caller's session. The clone copies the caller's functions,
+    * optimizer rules and `QueryExecutionListener`s when it is made, at
+    * the caller's first import: a listener registered on the caller
+    * after that does not see the import's queries. */
   def run(spark: SparkSession, xlsxPath: String, jdbcUrl: String,
       props: Properties = new Properties, sheet: Option[String] = None): Summary = {
-    val reader = spark.read.format("xlsx").schema(Schemas.fixtureSchema)
+    val session = importSession(spark)
+    val reader = session.read.format("xlsx").schema(Schemas.fixtureSchema)
     val raw = sheet.fold(reader)(s => reader.option("sheet", s)).load(xlsxPath)
 
     val clean = Clean.dedupDeterministic(Clean.transform(raw))
       .persist(StorageLevel.MEMORY_AND_DISK) // single materialization (fixes Q9)
 
-    val load = new Load(spark, jdbcUrl, props)
+    val load = new Load(session, jdbcUrl, props)
     try {
       // Dependency schedule. The reference loads plans → clients →
       // contracts → contacts (README.md:118 / etl_process.py:219–222),
@@ -64,6 +80,29 @@ object Pipeline {
         load.release()
         throw e
     } finally clean.unpersist()
+  }
+
+  private var kept: Option[(SparkSession, SparkSession)] = None
+
+  /** The import session of `caller`: a clone made on its first import
+    * and kept, so later imports reuse what the session has cached,
+    * generated code among it, instead of paying for it per call. One is
+    * kept per process, for the caller last seen. On every call the
+    * caller's modifiable confs are copied into it, keys the caller no
+    * longer sets are unset, and AQE is switched off. Nothing is written
+    * to the caller's confs. */
+  private def importSession(caller: SparkSession): SparkSession = synchronized {
+    val s = kept.collect { case (c, clone) if c eq caller => clone }.getOrElse {
+      val clone = PlanBridge.cloneSession(caller)
+      kept = Some((caller, clone))
+      clone
+    }
+    val confs = caller.conf.getAll.filter { case (k, _) => caller.conf.isModifiable(k) } +
+      ("spark.sql.adaptive.enabled" -> "false")
+    s.conf.getAll.keys.filter(k => s.conf.isModifiable(k) && !confs.contains(k))
+      .foreach(s.conf.unset)
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
   }
 
   /** Runs `a` on a thread started for this call and `b` on the

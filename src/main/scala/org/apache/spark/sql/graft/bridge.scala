@@ -10,8 +10,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * the classic-backend converters are `private[sql]`. Custom native
   * expressions still need them, so this one-file shim lives in the
   * `org.apache.spark.sql` namespace — the same pattern OSS Spark
-  * extension libraries use. Nothing else in this repo reaches into Spark
-  * internals.
+  * extension libraries use. It and `PlanBridge` are the only files of
+  * `src/main` in that namespace.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

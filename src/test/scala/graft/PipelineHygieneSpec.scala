@@ -3,6 +3,8 @@ package graft
 import java.sql.DriverManager
 
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.etl.{Pipeline, SchemaSetup}
 import graft.ops.PipelineCache
@@ -10,10 +12,12 @@ import graft.ops.PipelineCache
 /** Job count and session hygiene of one warm import: `Pipeline.run` of
   * the golden fixture into a `SchemaSetup` sink that already holds one
   * import. Each batch is FK-resolved once and its counts are one
-  * aggregate, so the import runs at most 15 Spark jobs, and the one
-  * frame `Summary.rejects` reads is all it leaves persisted — on
-  * failure, not even that, and no job of it still runs. The loads run
-  * two at a time; the jobs of both carry the caller's job group. */
+  * aggregate, and the import runs on the caller's kept import session,
+  * with adaptive execution off and the caller's confs otherwise, so it
+  * runs at most 9 Spark jobs. The one frame `Summary.rejects` reads is
+  * all it leaves persisted — on failure, not even that, and no job of it
+  * still runs. The loads run two at a time; the jobs of both carry the
+  * caller's job group. */
 class PipelineHygieneSpec extends SessionHygiene {
 
   private def provisioned(): String = {
@@ -22,27 +26,43 @@ class PipelineHygieneSpec extends SessionHygiene {
     url
   }
 
-  test("a warm import runs at most 16 Spark jobs and leaves one persisted frame") {
+  test("a warm import runs at most 9 non-adaptive Spark jobs on a kept session") {
     val url = provisioned()
-    Pipeline.run(spark, GoldenFixture.path, url)
+    val first = Pipeline.run(spark, GoldenFixture.path, url)
     spark.catalog.clearCache()
     PipelineCache.releaseAll()
-    val rdds0 = persistedRdds()
-    val confs0 = sqlConfs()
-    val views0 = tempViews()
-    val (summary, jobs) = jobsOf(Pipeline.run(spark, GoldenFixture.path, url))
+    // a conf the caller changes between two imports reaches the second
+    val width = "spark.sql.shuffle.partitions"
+    val width0 = spark.conf.getOption(width)
+    spark.conf.set(width, "3")
     try {
-      // 15 since the contact count joined the counts aggregate; the name
-      // keeps the earlier bound
-      assert(jobs.size <= 15, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
-      val added = persistedRdds() -- rdds0
-      assert(added.size == 1, "persisted by the import: " + describeRdds(added))
-      assert(rdds0.subsetOf(persistedRdds()))
-      assert(sqlConfs() == confs0)
-      assert(tempViews() == views0)
-      // the kept frame serves the caller's reject reads
-      assert(summary.rejects.count() == 0)
-    } finally spark.catalog.clearCache()
+      val rdds0 = persistedRdds()
+      val confs0 = sqlConfs()
+      val views0 = tempViews()
+      val (summary, events) = eventsOf(Pipeline.run(spark, GoldenFixture.path, url))
+      try {
+        val jobs = events.collect { case e: SparkListenerJobStart => describeJob(e) }
+        assert(jobs.size <= 9, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
+        val roots = events.collect { case e: SparkListenerSQLExecutionStart => e.sparkPlanInfo.nodeName }
+        assert(roots.nonEmpty)
+        assert(!roots.contains("AdaptiveSparkPlan"), "execution roots: " + roots.mkString(", "))
+        // a stage with parent stages reads a shuffle; the widest has the caller's width
+        val readWidths = events.collect {
+          case e: SparkListenerStageSubmitted if e.stageInfo.parentIds.nonEmpty => e.stageInfo.numTasks
+        }
+        assert(readWidths.nonEmpty && readWidths.max == 3, "shuffle-read stage widths: " + readWidths)
+        val session = summary.rejects.sparkSession
+        assert(session ne spark)
+        assert(session eq first.rejects.sparkSession, "each import made its own session")
+        val added = persistedRdds() -- rdds0
+        assert(added.size == 1, "persisted by the import: " + describeRdds(added))
+        assert(rdds0.subsetOf(persistedRdds()))
+        assert(sqlConfs() == confs0)
+        assert(tempViews() == views0)
+        // the kept frame serves the caller's reject reads
+        assert(summary.rejects.count() == 0)
+      } finally spark.catalog.clearCache()
+    } finally width0.fold(spark.conf.unset(width))(spark.conf.set(width, _))
   }
 
   test("a failed import leaves no persisted RDD behind") {

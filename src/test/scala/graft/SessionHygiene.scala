@@ -4,8 +4,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.{ListenerBusDrain, SparkFirehoseListener}
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** What a query or import must leave as it found it in the shared
@@ -36,25 +36,35 @@ trait SessionHygiene extends SparkTestBase {
     * started, in start order: the job's description or call site. */
   protected def jobsOf[T](f: => T): (T, Seq[String]) = {
     val (r, starts) = jobStartsOf(f)
-    (r, starts.map(e => Seq("spark.job.description", "callSite.short")
-      .flatMap(k => Option(e.properties).flatMap(p => Option(p.getProperty(k))))
-      .headOption.getOrElse(s"job ${e.jobId}")))
+    (r, starts.map(describeJob))
   }
+
+  protected def describeJob(e: SparkListenerJobStart): String =
+    Seq("spark.job.description", "callSite.short")
+      .flatMap(k => Option(e.properties).flatMap(p => Option(p.getProperty(k))))
+      .headOption.getOrElse(s"job ${e.jobId}")
 
   /** Runs `f` and returns its result with the start event of every Spark
     * job it started, from any thread, in start order. */
   protected def jobStartsOf[T](f: => T): (T, Seq[SparkListenerJobStart]) = {
+    val (r, events) = eventsOf(f)
+    (r, events.collect { case e: SparkListenerJobStart => e })
+  }
+
+  /** Runs `f` and returns its result with every listener event posted
+    * while it ran, from any thread, in posting order. */
+  protected def eventsOf[T](f: => T): (T, Seq[SparkListenerEvent]) = {
     val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    val events = new ConcurrentLinkedQueue[SparkListenerEvent]
+    val listener = new SparkFirehoseListener {
+      override def onEvent(e: SparkListenerEvent): Unit = events.add(e)
     }
     ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try {
       val r = f
       ListenerBusDrain(sc)
-      (r, jobs.asScala.toSeq)
+      (r, events.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
